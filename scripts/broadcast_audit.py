@@ -23,12 +23,9 @@ sys.path.insert(0, REPO)
 os.environ.setdefault("SPARK_UI", "true")
 
 from turbine_maintenance_etl_spark import get_spark  # noqa: E402
-from turbine_maintenance_etl_spark.queries import REGISTRY  # noqa: E402
-import turbine_maintenance_etl_spark.queries_llm  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_suites  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: E402,F401
+from turbine_maintenance_etl_spark.queries import load_registry  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def main() -> None:

@@ -19,12 +19,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from turbine_maintenance_etl_spark import get_spark  # noqa: E402
-from turbine_maintenance_etl_spark.queries import REGISTRY  # noqa: E402
-import turbine_maintenance_etl_spark.queries_llm  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_suites  # noqa: E402,F401
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: E402,F401
+from turbine_maintenance_etl_spark.queries import load_registry  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def main() -> None:

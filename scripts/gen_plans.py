@@ -34,12 +34,8 @@ BroadcastExchange (moves the SMALL side only — not a scaling concern).
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from turbine_maintenance_etl_spark import get_spark
-    from turbine_maintenance_etl_spark.queries import REGISTRY
-    import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
+    from turbine_maintenance_etl_spark.queries import load_registry
+    REGISTRY = load_registry()
     from bench import BENCH_QUERIES
 
     spark = get_spark(app_name="gen-plans")

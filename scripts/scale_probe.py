@@ -92,12 +92,8 @@ def main() -> None:
         reps = int(args[args.index("--reps") + 1])
 
     from turbine_maintenance_etl_spark import get_spark
-    from turbine_maintenance_etl_spark.queries import REGISTRY
-    import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+    from turbine_maintenance_etl_spark.queries import load_registry
+    REGISTRY = load_registry()
 
     spark = get_spark(app_name="scale-probe")
     out_dir = f"/tmp/probe{reps}x"

@@ -12,7 +12,12 @@ any conf the registry silently depends on fails HERE first.
 Usage:  python scripts/selfcheck_vanilla.py [sf_dir] [--only name1,name2]
                                             [--out PATH]
 Writes the {name: {rows_match, schema_match, values_match, spark_rows,
-oracle_rows, err}} artifact and exits non-zero on any failure.
+oracle_rows, value_digest, err}} artifact and exits non-zero on any
+failure. ``value_digest`` is the sha256 of the Spark rows after
+``oracle_harness.canonicalize`` (columns and rows sorted, dtypes
+unified): two runs over the same data that agree on it returned the
+same values, so it is the before/after check for a refactor that must
+not change any entry's output.
 
 Artifact policy (round-5 fix for the recurring truncation arms race):
 a FULL run writes SELFCHECK.json (or --out); a --only run writes
@@ -25,6 +30,7 @@ query, all green.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -64,7 +70,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod
-    from oracle_harness import compare, duck_connection
+    from oracle_harness import canonicalize, compare, duck_connection
 
     # the driver smoke-checks entry() with ITS session too — replicate
     entry_df = entry_mod.entry(spark)
@@ -87,11 +93,15 @@ def main() -> int:
             "values_match": None,
             "spark_rows": None,
             "oracle_rows": None,
+            "value_digest": None,
             "err": None,
         }
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
             rec["spark_rows"] = int(len(spark_pdf))
+            rec["value_digest"] = hashlib.sha256(
+                canonicalize(spark_pdf).to_csv(index=False).encode()
+            ).hexdigest()
             if name in oracles:
                 duck_pdf = con.execute(oracles[name]).df()
                 rec["oracle_rows"] = int(len(duck_pdf))

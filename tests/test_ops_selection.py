@@ -105,3 +105,13 @@ def test_entry_matches_native_form(spark):
         F.round(F.corr("l_extendedprice", "l_discount"), 4).alias("corr_price_disc"),
     ).collect()[0].asDict()
     assert got == want
+
+
+def test_round_cap_fallback_is_exact(spark):
+    """max_rounds=0 sends every rank straight to the fallback. At n=1000
+    the ranks 250 and 500 do not survive the percentage round trip
+    (250/999*999 != 250 in doubles), so a fallback that re-derives a
+    percentage interpolates between neighbours instead of returning the
+    order statistic itself."""
+    rng = random.Random(23)
+    _check(spark, [rng.uniform(-1e3, 1e3) for _ in range(1000)], max_rounds=0)

@@ -1,18 +1,23 @@
 """The round-5 tagged-union suites claim to be EXACTLY the original
 entries' rows with a variant tag — this differential pins that claim, so
 a suite can never silently drift from the single-operator entries it
-graded-replaces (WINDOW_CHANGELOG.md round-5 note)."""
+graded-replaces (WINDOW_CHANGELOG.md round-5 note).
+
+The round-4 suites (P, J, A, O families) derive most branches by
+reducing the registered single entry's output, so those cannot drift.
+The few branches that stay inline (the member lacks a column the suite
+row needs) are pinned here on the columns they share with their single
+entry, as is the one derived branch whose equality rests on the data
+(p7 reduces ROUND(c_acctbal, 2), the suite row stands for the raw sum)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import _t, load_registry
+
+REGISTRY = load_registry()
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -97,3 +102,53 @@ def test_stats_suite_branches_equal_melted_originals(spark):
             for m in metrics:
                 want[(variant, k1, k2, m)] = float(r[m]) if r[m] is not None else None
     assert got == want
+
+
+def _branch(spark, suite, where):
+    return REGISTRY[suite].fn(spark, SF_DIR).filter(where).collect()
+
+
+def test_constant_probe_matches_p3(spark):
+    got = {
+        r["col"]: r["metric"]
+        for r in _branch(spark, "p_schema_pruning_suite", "probe = 'constant'")
+    }
+    p3 = REGISTRY["p3_constant_detection"].fn(spark, SF_DIR).collect()[0]
+    assert got["o_orderstatus"] == p3["nd_status"]
+    assert got["o_orderpriority"] == p3["nd_priority"]
+
+
+def test_j2_keygen_branch_matches_j2(spark):
+    (row,) = _branch(spark, "j_join_suite", "op = 'j2_keygen'")
+    j2 = REGISTRY["j2_rownumber_keygen"].fn(spark, SF_DIR).collect()
+    assert row["n"] == len(j2)
+    assert row["key"] == next(r["n_name"] for r in j2 if r["rn"] == 1)
+
+
+def test_a9_branch_matches_a9(spark):
+    (row,) = _branch(spark, "a_grouped_agg_suite", "op = 'a9_two_level'")
+    a9 = REGISTRY["a9_two_level_agg"].fn(spark, SF_DIR).collect()[0]
+    assert (row["v1"], row["v2"]) == (a9["avg_cust_max"], a9["avg_cust_orders"])
+
+
+def test_topk_recent_branch_matches_o2(spark):
+    got = [
+        (r["k1"], r["k2"])
+        for r in _branch(spark, "o_order_limit_suite", "src = 'topk_recent'")
+    ]
+    want = [
+        (r["event_id"], str(r["ts_us"]))
+        for r in REGISTRY["o2_topk_recent"].fn(spark, SF_DIR).collect()
+    ]
+    assert sorted(got) == sorted(want)
+
+
+def test_p7_branch_equals_raw_balance_sum(spark):
+    (row,) = _branch(spark, "p_projection_cast_suite", "op = 'p7_membership'")
+    raw = (
+        _t(spark, SF_DIR, "customer")
+        .filter(F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
+        .agg(F.round(F.sum("c_acctbal"), 2))
+        .collect()[0][0]
+    )
+    assert row["chk"] == raw

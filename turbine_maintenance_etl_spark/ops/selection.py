@@ -27,9 +27,10 @@ exactly — the rank bookkeeping is exact regardless of how floating
 binning skews bin sizes. Convergence: each round's interval is the
 observed min/max of a strict subset whenever the histogram separates
 anything; pathological clusters (many distinct values within ulps) are
-cut off by ``max_rounds`` and fall back to Spark's native percentile
-over the FILTERED interval (<= the previous round's row count, so the
-fallback is never worse than the single-buffer status quo). NaN inputs
+cut off by ``max_rounds`` and fall back to fetching each unresolved
+rank's order statistic from the FILTERED interval directly: one sorted
+pass (row_number over the slice, spillable, <= the previous round's row
+count) returns the single value at the rank's offset. NaN inputs
 (which Spark orders greatest) also take the native fallback rather
 than poisoning the arithmetic of the histogram map.
 
@@ -37,13 +38,19 @@ Driver payload per round: <= (#distinct intervals) x bins count rows —
 O(KB); the final collect is <= collect_threshold doubles per rank.
 At 100 TB / 1e12 rows: ceil(log_1024(1e12 / 8192)) = 3 refinement
 passes, each a narrow scan + map-side aggregate.
+
+Eagerness: ``exact_percentiles`` runs its Spark jobs when it is CALLED
+and returns plain floats. A builder that uses it (``a12_a14_quantile_corr``)
+therefore executes the selection while the DataFrame is being BUILT;
+the returned DataFrame carries the percentiles as literals, and only
+its remaining aggregates run lazily when an action is taken.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _BINS = 1024
@@ -144,17 +151,18 @@ def _order_stats(
             else:  # bookkeeping can't miss — counts sum to cnt
                 raise AssertionError("rank offset exceeded interval count")
     # pathological residue (max_rounds hit: e.g. huge clusters of
-    # distinct values within ulps): native percentile over the SHRUNKEN
-    # slice — bounded by the last round's interval count, so never
-    # worse than the single-buffer status quo on the whole column.
-    # p = off/(cnt-1) makes (cnt-1)*p integral, so the interpolation
-    # lands exactly on the off-th order statistic of the slice.
-    for r, (lo, hi, off, cnt) in state.items():
-        p = 0.0 if cnt <= 1 else off / (cnt - 1)
-        row = base.filter((F.col("_v") >= lo) & (F.col("_v") <= hi)).agg(
-            F.percentile("_v", F.lit(float(p))).alias("_x")
-        ).collect()[0]
-        resolved[r] = float(row["_x"])
+    # distinct values within ulps): fetch the off-th order statistic of
+    # the SHRUNKEN slice directly — one sorted pass over at most the last
+    # round's interval count, one row back to the driver.
+    for r, (lo, hi, off, _cnt) in state.items():
+        row = (
+            base.filter((F.col("_v") >= lo) & (F.col("_v") <= hi))
+            .withColumn("_rn", F.row_number().over(Window.orderBy("_v")))
+            .filter(F.col("_rn") == off + 1)
+            .select("_v")
+            .collect()[0]
+        )
+        resolved[r] = float(row["_v"])
     return resolved
 
 

@@ -1,4 +1,4 @@
-"""Consolidated §2 suite entries — round-4 grading-window compaction.
+"""Consolidated §2 suite entries — grading-window compaction.
 
 The driver grades only the first ``GRADE_WINDOW`` (50) registry entries,
 and round 3's verdict flagged that every flagship LLM-pipeline operator
@@ -10,10 +10,18 @@ each into single tagged-union graded rows (the pattern already proven by
 extension surface (LSH variants, semantic dedup, curation chains, drift,
 SCD2, packing, …).
 
-The ORIGINAL single-operator entries remain registered below the window
-— still selfchecked per round and still run by ``tests/test_oracle.py``
-— so nothing loses verification; the suites ADD a second, merged oracle
-row per family inside the graded window.
+One definition per operator: the single-operator entries remain
+registered below the window — still selfchecked per round and still run
+by ``tests/test_oracle.py`` — and they are the ONLY place an operator is
+defined. The round-4 suites (P, J, A, O families) CALL the registered
+builder of each member and reduce its output through one shared reducer
+(``_Branch``): the reduction is SQL text that both engines parse, so the
+Spark side runs it with ``F.expr`` and the DuckDB side wraps the
+member's own oracle in ``SELECT <reduction> FROM (<member oracle>)``.
+The suite decides only the reduction. A branch stays inline only where
+the member's output lacks a column the suite row needs; each such branch
+is pinned against its single entry by ``tests/test_suite_consistency.py``.
+The round-5/6 suites further down union or melt the members' full rows.
 
 Reference parity citations live on the original entries; each suite
 docstring names the §2 IDs it carries.
@@ -21,162 +29,110 @@ docstring names the §2 IDs it carries.
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from turbine_maintenance_etl_spark.queries import _t, register
+from turbine_maintenance_etl_spark.queries import REGISTRY, _t, register
+import turbine_maintenance_etl_spark.queries_llm  # noqa: F401  (registers sim/pii entries)
+import turbine_maintenance_etl_spark.queries_ext  # noqa: F401  (registers P1/P4/P10/P12/O1/A16, chunking/session entries)
+
+
+class _Branch(NamedTuple):
+    """One derived suite row (or rows): a registered single entry's
+    output reduced by SQL text, one expression per suite column."""
+
+    member: str
+    exprs: tuple[str, ...]
+    where: str | None = None  # row filter on the member's output
+
+
+def _reduced(
+    spark: SparkSession, sf_dir: str, cols: tuple[str, ...], branches: tuple[_Branch, ...]
+) -> list[DataFrame]:
+    """Spark side: build each member entry once, reduce it per branch."""
+    built = {b.member: REGISTRY[b.member].fn(spark, sf_dir) for b in branches}
+    out = []
+    for b in branches:
+        df = built[b.member]
+        if b.where is not None:
+            df = df.filter(F.expr(b.where))
+        out.append(df.select(*[F.expr(e).alias(c) for c, e in zip(cols, b.exprs, strict=True)]))
+    return out
+
+
+def _reduced_sql(cols: tuple[str, ...], branches: tuple[_Branch, ...]) -> list[str]:
+    """DuckDB side: the same reduction text around each member's oracle."""
+    out = []
+    for b in branches:
+        sel = ", ".join(f"{e} AS {c}" for c, e in zip(cols, b.exprs, strict=True))
+        where = "" if b.where is None else f" WHERE {b.where}"
+        out.append(f"SELECT {sel} FROM ({REGISTRY[b.member].oracle}){where}")
+    return out
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _union_sql(parts: list[str]) -> str:
+    return "\nUNION ALL\n".join(parts)
 
 
 # ---------------------------------------------------------------------------
 # P-family: projections / filters / casts (P1, P2, P5/P6, P7, P8, P10,
-# P11, P12) — each branch is the original operator reduced to a
-# deterministic (n, checksum, min, max) row so nine full-row results
-# become one 9-row graded entry.
+# P11, P12) — each branch is the member entry reduced to a deterministic
+# (n, checksum, min, max) row so nine full-row results become one 9-row
+# graded entry.
 # ---------------------------------------------------------------------------
 
-@register(
-    "p_projection_cast_suite",
-    """
-    SELECT 'p1_truncate' AS op, COUNT(*) AS n,
-           ROUND(CAST(SUM(l_suppkey + l_linenumber) AS DOUBLE), 2) AS chk,
-           MIN(CAST(l_orderkey AS VARCHAR)) AS smin,
-           MAX(CAST(l_orderkey AS VARCHAR)) AS smax
-    FROM (SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber FROM lineitem)
-    UNION ALL
-    SELECT 'p2_project', COUNT(*), ROUND(SUM(l_quantity), 2),
-           MIN(CAST(l_partkey AS VARCHAR)), MAX(CAST(l_partkey AS VARCHAR))
-    FROM (SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem)
-    UNION ALL
-    SELECT 'p5_cast', COUNT(*),
-           ROUND(CAST(SUM(CAST(ROUND(o_totalprice, 0) AS BIGINT)) AS DOUBLE), 2),
-           MIN(CAST(o_orderkey AS VARCHAR)), MAX(CAST(o_orderkey AS VARCHAR))
-    FROM orders
-    UNION ALL
-    SELECT 'p6_coerce', COUNT(TRY_CAST(o_orderpriority AS DOUBLE)),
-           ROUND(COALESCE(SUM(TRY_CAST(o_orderpriority AS DOUBLE)), 0.0), 2),
-           NULL, NULL
-    FROM orders
-    UNION ALL
-    SELECT 'p7_membership', COUNT(*), ROUND(SUM(c_acctbal), 2),
-           MIN(c_mktsegment), MAX(c_mktsegment)
-    FROM customer WHERE c_mktsegment IN ('BUILDING', 'AUTOMOBILE')
-    UNION ALL
-    SELECT 'p8_compare', COUNT(*), ROUND(SUM(value), 2),
-           MIN(event_type), MAX(event_type)
-    FROM events WHERE event_type <> 'view' AND value IS NOT NULL AND value >= 50.0
-    UNION ALL
-    SELECT 'p10_rename', COUNT(*), ROUND(SUM(balance), 2),
-           MIN(supplier_name), MAX(supplier_name)
-    FROM (SELECT s_suppkey AS supplier_id, s_name AS supplier_name,
-                 ROUND(s_acctbal, 2) AS balance FROM supplier)
-    UNION ALL
-    SELECT 'p11_tag', COUNT(*), ROUND(CAST(SUM(r_regionkey) AS DOUBLE), 2),
-           MIN(dataset), MAX(dataset)
-    FROM (SELECT r_regionkey, 'testdata' AS dataset FROM region)
-    UNION ALL
-    SELECT 'p12_colregex', COUNT(*), ROUND(CAST(SUM(l_suppkey) AS DOUBLE), 2),
-           MIN(CAST(l_partkey AS VARCHAR)), MAX(CAST(l_partkey AS VARCHAR))
-    FROM (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem)
-    """,
+_P_COLS = ("op", "n", "chk", "smin", "smax")
+_P_BRANCHES = (
+    _Branch("p1_positional_truncation", (
+        "'p1_truncate'", "COUNT(*)",
+        "ROUND(CAST(SUM(l_suppkey + l_linenumber) AS DOUBLE), 2)",
+        "MIN(CAST(l_orderkey AS STRING))", "MAX(CAST(l_orderkey AS STRING))")),
+    _Branch("p2_projection", (
+        "'p2_project'", "COUNT(*)", "ROUND(SUM(l_quantity), 2)",
+        "MIN(CAST(l_partkey AS STRING))", "MAX(CAST(l_partkey AS STRING))")),
+    _Branch("p5_cast_projection", (
+        "'p5_cast'", "COUNT(*)", "ROUND(CAST(SUM(price_int) AS DOUBLE), 2)",
+        "MIN(key_str)", "MAX(key_str)")),
+    _Branch("p5_cast_projection", (
+        "'p6_coerce'", "COUNT(prio_num)",
+        "ROUND(COALESCE(SUM(prio_num), CAST(0 AS DOUBLE)), 2)",
+        "CAST(NULL AS STRING)", "CAST(NULL AS STRING)")),
+    # p7 exposes ROUND(c_acctbal, 2) where this row stands for the raw
+    # sum; account balances are cents amounts, so the rounding is the
+    # identity (pinned by tests/test_suite_consistency.py)
+    _Branch("p7_membership_filter", (
+        "'p7_membership'", "COUNT(*)", "ROUND(SUM(acctbal), 2)",
+        "MIN(c_mktsegment)", "MAX(c_mktsegment)")),
+    _Branch("p8_comparison_filter", (
+        "'p8_compare'", "COUNT(*)", "ROUND(SUM(value), 2)",
+        "MIN(event_type)", "MAX(event_type)")),
+    _Branch("p10_rename_projection", (
+        "'p10_rename'", "COUNT(*)", "ROUND(SUM(balance), 2)",
+        "MIN(supplier_name)", "MAX(supplier_name)")),
+    _Branch("p11_literal_tag", (
+        "'p11_tag'", "COUNT(*)", "ROUND(CAST(SUM(r_regionkey) AS DOUBLE), 2)",
+        "MIN(dataset)", "MAX(dataset)")),
+    _Branch("p12_regex_column_select", (
+        "'p12_colregex'", "COUNT(*)", "ROUND(CAST(SUM(l_suppkey) AS DOUBLE), 2)",
+        "MIN(CAST(l_partkey AS STRING))", "MAX(CAST(l_partkey AS STRING))")),
 )
+
+
+@register("p_projection_cast_suite", _union_sql(_reduced_sql(_P_COLS, _P_BRANCHES)))
 def p_projection_cast_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1 positional truncation + P2 subset projection + P5 typed casts +
     P6 lossy coercion (try_cast → NULL) + P7 membership + P8 comparison
     filters + P10 rename + P11 literal tag + P12 regex column selection,
-    each reduced to one deterministic checksum row (op, n, chk, smin,
-    smax). Full-row variants remain registered individually."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-
-    def row(op: str, df: DataFrame, n, chk, smin, smax) -> DataFrame:
-        return df.agg(
-            F.lit(op).alias("op"),
-            n.alias("n"),
-            chk.alias("chk"),
-            smin.alias("smin"),
-            smax.alias("smax"),
-        )
-
-    p1_src = li.select(*li.columns[:4])  # positional, like df.iloc[:, :4]
-    p1 = row(
-        "p1_truncate", p1_src,
-        F.count("*"),
-        F.round(F.sum(F.col("l_suppkey") + F.col("l_linenumber")).cast("double"), 2),
-        F.min(F.col("l_orderkey").cast("string")),
-        F.max(F.col("l_orderkey").cast("string")),
-    )
-    p2_src = li.select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-    p2 = row(
-        "p2_project", p2_src,
-        F.count("*"),
-        F.round(F.sum("l_quantity"), 2),
-        F.min(F.col("l_partkey").cast("string")),
-        F.max(F.col("l_partkey").cast("string")),
-    )
-    p5 = row(
-        "p5_cast", o,
-        F.count("*"),
-        F.round(F.sum(F.round("o_totalprice", 0).cast("bigint")).cast("double"), 2),
-        F.min(F.col("o_orderkey").cast("string")),
-        F.max(F.col("o_orderkey").cast("string")),
-    )
-    prio = F.col("o_orderpriority").try_cast("double")
-    p6 = row(
-        "p6_coerce", o,
-        F.count(prio),
-        F.round(F.coalesce(F.sum(prio), F.lit(0.0)), 2),
-        F.lit(None).cast("string"),
-        F.lit(None).cast("string"),
-    )
-    p7_src = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")
-    )
-    p7 = row(
-        "p7_membership", p7_src,
-        F.count("*"), F.round(F.sum("c_acctbal"), 2),
-        F.min("c_mktsegment"), F.max("c_mktsegment"),
-    )
-    p8_src = _t(spark, sf_dir, "events").filter(
-        (F.col("event_type") != "view")
-        & F.col("value").isNotNull()
-        & (F.col("value") >= 50.0)
-    )
-    p8 = row(
-        "p8_compare", p8_src,
-        F.count("*"), F.round(F.sum("value"), 2),
-        F.min("event_type"), F.max("event_type"),
-    )
-    p10_src = (
-        _t(spark, sf_dir, "supplier")
-        .withColumnsRenamed({"s_suppkey": "supplier_id", "s_name": "supplier_name"})
-        .select("supplier_id", "supplier_name", F.round("s_acctbal", 2).alias("balance"))
-    )
-    p10 = row(
-        "p10_rename", p10_src,
-        F.count("*"), F.round(F.sum("balance"), 2),
-        F.min("supplier_name"), F.max("supplier_name"),
-    )
-    p11_src = _t(spark, sf_dir, "region").select(
-        "r_regionkey", F.lit("testdata").alias("dataset")
-    )
-    p11 = row(
-        "p11_tag", p11_src,
-        F.count("*"),
-        F.round(F.sum("r_regionkey").cast("double"), 2),
-        F.min("dataset"), F.max("dataset"),
-    )
-    p12_src = li.select(li.colRegex("`l_.*key`"))
-    p12 = row(
-        "p12_colregex", p12_src,
-        F.count("*"),
-        F.round(F.sum("l_suppkey").cast("double"), 2),
-        F.min(F.col("l_partkey").cast("string")),
-        F.max(F.col("l_partkey").cast("string")),
-    )
-    out = p1
-    for b in (p2, p5, p6, p7, p8, p10, p11, p12):
-        out = out.unionByName(b)
-    return out
+    each member entry reduced to one deterministic checksum row (op, n,
+    chk, smin, smax)."""
+    return _union(_reduced(spark, sf_dir, _P_COLS, _P_BRANCHES))
 
 
 # ---------------------------------------------------------------------------
@@ -184,9 +140,14 @@ def p_projection_cast_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # columns) in one probe table.
 # ---------------------------------------------------------------------------
 
+_PRUNE_COLS = ("probe", "col", "metric", "flag")
+_PRUNE_ALLNULL = (_Branch("p4_allnull_detection", ("'allnull'", "col", "n_nonnull", "dropped")),)
+
+
 @register(
     "p_schema_pruning_suite",
-    """
+    _union_sql([
+        """
     SELECT 'constant' AS probe, col, metric,
            CASE WHEN metric <= 1 THEN 1 ELSE 0 END AS flag
     FROM (
@@ -196,27 +157,20 @@ def p_projection_cast_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 'o_orderpriority', COUNT(DISTINCT o_orderpriority) FROM orders
         UNION ALL
         SELECT 'tag', COUNT(DISTINCT 'fixed') FROM orders)
-    UNION ALL
-    SELECT 'allnull' AS probe, col, metric,
-           CASE WHEN metric = 0 THEN 1 ELSE 0 END AS flag
-    FROM (
-        SELECT 'ghost' AS col, COUNT(CAST(NULL AS DOUBLE)) AS metric FROM events
-        UNION ALL
-        SELECT 'value_masked',
-               COUNT(CASE WHEN value < 50 THEN NULL ELSE value END) FROM events
-        UNION ALL
-        SELECT 'event_type', COUNT(event_type) FROM events)
     """,
+        *_reduced_sql(_PRUNE_COLS, _PRUNE_ALLNULL),
+    ]),
 )
 def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 (constant-column detection, the reference's
     ``nunique(dropna=True) <= 1`` pre-pass) + P4 (all-null column drop,
-    ``dropna(axis=1, how='all')``) as one probe table: one countDistinct
-    pass and one count pass, stack-unpivoted, with the keep/drop flag as
-    a checkable value."""
-    o = _t(spark, sf_dir, "orders")
+    ``dropna(axis=1, how='all')``) as one probe table with the keep/drop
+    flag as a checkable value. The all-null rows are p4_allnull_detection's
+    rows; the constant probe stays inline because it adds a literal
+    ``tag`` column that p3_constant_detection does not count."""
     const = (
-        o.withColumn("tag", F.lit("fixed"))
+        _t(spark, sf_dir, "orders")
+        .withColumn("tag", F.lit("fixed"))
         .agg(
             F.countDistinct("o_orderstatus").alias("m_status"),
             F.countDistinct("o_orderpriority").alias("m_prio"),
@@ -233,31 +187,7 @@ def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("metric") <= 1, 1).otherwise(0).alias("flag"),
         )
     )
-    e = (
-        _t(spark, sf_dir, "events")
-        .withColumn("ghost", F.lit(None).cast("double"))
-        .withColumn(
-            "value_masked", F.when(F.col("value") < 50, None).otherwise(F.col("value"))
-        )
-    )
-    nulls = (
-        e.agg(
-            F.count("ghost").alias("m_ghost"),
-            F.count("value_masked").alias("m_vm"),
-            F.count("event_type").alias("m_et"),
-        )
-        .selectExpr(
-            "stack(3, 'ghost', m_ghost, 'value_masked', m_vm,"
-            " 'event_type', m_et) AS (col, metric)"
-        )
-        .select(
-            F.lit("allnull").alias("probe"),
-            "col",
-            F.col("metric").cast("bigint").alias("metric"),
-            F.when(F.col("metric") == 0, 1).otherwise(0).alias("flag"),
-        )
-    )
-    return const.unionByName(nulls)
+    return _union([const, *_reduced(spark, sf_dir, _PRUNE_COLS, _PRUNE_ALLNULL)])
 
 
 # ---------------------------------------------------------------------------
@@ -265,9 +195,24 @@ def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graded row (J1's broadcast equi-join keeps its own slot + plan pin).
 # ---------------------------------------------------------------------------
 
+_J_COLS = ("op", "n", "chk", "key", "chk2")
+_J_BRANCHES = (
+    _Branch("j_left_outer_join", (
+        "'left_outer'", "COUNT(*)", "ROUND(SUM(total_bal), 2)",
+        "CAST(NULL AS STRING)", "CAST(SUM(n_suppliers) AS DOUBLE)")),
+    *(
+        _Branch("j_semi_anti_join", (
+            f"'{op}'", "COUNT(*)", "ROUND(CAST(SUM(key) AS DOUBLE), 2)",
+            "MIN(name)", "CAST(NULL AS DOUBLE)"), where=f"op = '{op}'")
+        for op in ("semi", "anti")
+    ),
+)
+
+
 @register(
     "j_join_suite",
-    """
+    _union_sql([
+        """
     SELECT 'j2_keygen' AS op, CAST(COUNT(*) AS BIGINT) AS n,
            ROUND(CAST(SUM(rn * n_nationkey) AS DOUBLE), 2) AS chk,
            MAX(CASE WHEN rn = 1 THEN n_name END) AS key,
@@ -275,34 +220,17 @@ def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT n_name, n_nationkey,
                  CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) AS BIGINT) AS rn
           FROM nation)
-    UNION ALL
-    SELECT 'left_outer', COUNT(*), ROUND(SUM(total_bal), 2), NULL,
-           CAST(SUM(n_suppliers) AS DOUBLE)
-    FROM (SELECT n.n_name,
-                 CAST(COUNT(s.s_suppkey) AS BIGINT) AS n_suppliers,
-                 ROUND(COALESCE(SUM(s.s_acctbal), 0), 2) AS total_bal
-          FROM nation n LEFT JOIN supplier s ON s.s_nationkey = n.n_nationkey
-          GROUP BY n.n_name)
-    UNION ALL
-    SELECT 'semi', COUNT(*), ROUND(CAST(SUM(c_custkey) AS DOUBLE), 2),
-           MIN(c_name), NULL
-    FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-    UNION ALL
-    SELECT 'anti', COUNT(*), ROUND(CAST(SUM(p_partkey) AS DOUBLE), 2),
-           MIN(p_name), NULL
-    FROM part p
-    WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
     """,
+        *_reduced_sql(_J_COLS, _J_BRANCHES),
+    ]),
 )
 def j_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (order-pinned row_number key generation, the RUL-file line↔unit
     mapping) + left outer + semi + anti join strategies, each reduced to
     a checksum row. The rn*key product pins the positional mapping, not
-    just the count."""
-    n = _t(spark, sf_dir, "nation")
-    rn_frame = n.select(
+    just the count — which is why J2 stays inline: j2_rownumber_keygen
+    does not expose n_nationkey."""
+    rn_frame = _t(spark, sf_dir, "nation").select(
         "n_name",
         "n_nationkey",
         F.row_number().over(Window.orderBy("n_nationkey")).cast("bigint").alias("rn"),
@@ -314,47 +242,7 @@ def j_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("rn") == 1, F.col("n_name"))).alias("key"),
         F.lit(None).cast("double").alias("chk2"),
     )
-    s = _t(spark, sf_dir, "supplier")
-    left_grouped = (
-        n.join(s, s.s_nationkey == n.n_nationkey, "left")
-        .groupBy("n_name")
-        .agg(
-            F.count("s_suppkey").alias("n_suppliers"),
-            F.round(F.coalesce(F.sum("s_acctbal"), F.lit(0.0)), 2).alias("total_bal"),
-        )
-    )
-    left = left_grouped.agg(
-        F.lit("left_outer").alias("op"),
-        F.count("*").alias("n"),
-        F.round(F.sum("total_bal"), 2).alias("chk"),
-        F.lit(None).cast("string").alias("key"),
-        F.sum("n_suppliers").cast("double").alias("chk2"),
-    )
-    c = _t(spark, sf_dir, "customer")
-    big_orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    semi = (
-        c.join(big_orders, c.c_custkey == big_orders.o_custkey, "left_semi")
-        .agg(
-            F.lit("semi").alias("op"),
-            F.count("*").alias("n"),
-            F.round(F.sum("c_custkey").cast("double"), 2).alias("chk"),
-            F.min("c_name").alias("key"),
-            F.lit(None).cast("double").alias("chk2"),
-        )
-    )
-    p = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
-    anti = (
-        p.join(li, p.p_partkey == li.l_partkey, "left_anti")
-        .agg(
-            F.lit("anti").alias("op"),
-            F.count("*").alias("n"),
-            F.round(F.sum("p_partkey").cast("double"), 2).alias("chk"),
-            F.min("p_name").alias("key"),
-            F.lit(None).cast("double").alias("chk2"),
-        )
-    )
-    return j2.unionByName(left).unionByName(semi).unionByName(anti)
+    return _union([j2, *_reduced(spark, sf_dir, _J_COLS, _J_BRANCHES)])
 
 
 # ---------------------------------------------------------------------------
@@ -362,57 +250,38 @@ def j_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # conditional share + A16 summary statistics.
 # ---------------------------------------------------------------------------
 
+_A_COLS = ("op", "k", "n", "v1", "v2", "v3")
+_A_BRANCHES = (
+    _Branch("a1_grouped_minmax", (
+        "'a1_minmax'", "'orders_by_cust'", "COUNT(*)", "ROUND(SUM(price_min), 2)",
+        "ROUND(SUM(price_max), 2)", "CAST(SUM(n_orders) AS DOUBLE)")),
+    _Branch("a10_conditional_share", (
+        "'a10_share'", "o_orderstatus", "n", "big_share",
+        "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)")),
+    _Branch("a16_summary_stats", ("'a16_describe'", "col", "n", "mean", "std", "max")),
+)
+
+
 @register(
     "a_grouped_agg_suite",
-    """
-    SELECT 'a1_minmax' AS op, 'orders_by_cust' AS k, CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(SUM(price_min), 2) AS v1, ROUND(SUM(price_max), 2) AS v2,
-           CAST(SUM(n_orders) AS DOUBLE) AS v3
-    FROM (SELECT o_custkey, ROUND(MIN(o_totalprice), 2) AS price_min,
-                 ROUND(MAX(o_totalprice), 2) AS price_max, COUNT(*) AS n_orders
-          FROM orders GROUP BY o_custkey)
-    UNION ALL
+    _union_sql([
+        *_reduced_sql(_A_COLS, _A_BRANCHES),
+        """
     SELECT 'a9_two_level', NULL, COUNT(*),
            ROUND(AVG(mx), 4), ROUND(AVG(cnt), 4), NULL
     FROM (SELECT o_custkey, MAX(o_totalprice) AS mx, COUNT(*) AS cnt
           FROM orders GROUP BY o_custkey)
-    UNION ALL
-    SELECT 'a10_share', o_orderstatus, COUNT(*),
-           ROUND(SUM(CASE WHEN o_totalprice > 300000 THEN 1 ELSE 0 END)
-                 / CAST(COUNT(*) AS DOUBLE), 6), NULL, NULL
-    FROM orders GROUP BY o_orderstatus
-    UNION ALL
-    SELECT 'a16_describe', 'l_quantity', COUNT(l_quantity),
-           ROUND(AVG(l_quantity), 4), ROUND(STDDEV(l_quantity), 4),
-           ROUND(MAX(l_quantity), 4)
-    FROM lineitem
-    UNION ALL
-    SELECT 'a16_describe', 'l_discount', COUNT(l_discount),
-           ROUND(AVG(l_discount), 4), ROUND(STDDEV(l_discount), 4),
-           ROUND(MAX(l_discount), 4)
-    FROM lineitem
     """,
+    ]),
 )
 def a_grouped_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (grouped min/max/count, re-aggregated to a checksum over all
     1500 groups) + A9 (two-level agg — DAX AVERAGEX over SUMMARIZE) +
-    A10 (conditional share) + A16 (describe()-style summary stats)."""
-    o = _t(spark, sf_dir, "orders")
-    # mx is the UNROUNDED max (a9 averages it; price_max is rounded per
-    # A1's checksum contract — not a duplicate); n_orders serves both
-    per_cust = o.groupBy("o_custkey").agg(
-        F.round(F.min("o_totalprice"), 2).alias("price_min"),
-        F.round(F.max("o_totalprice"), 2).alias("price_max"),
-        F.count("*").alias("n_orders"),
-        F.max("o_totalprice").alias("mx"),
-    )
-    a1 = per_cust.agg(
-        F.lit("a1_minmax").alias("op"),
-        F.lit("orders_by_cust").alias("k"),
-        F.count("*").alias("n"),
-        F.round(F.sum("price_min"), 2).alias("v1"),
-        F.round(F.sum("price_max"), 2).alias("v2"),
-        F.sum("n_orders").cast("double").alias("v3"),
+    A10 (conditional share) + A16 (describe()-style summary stats).
+    A9 stays inline: its row counts the per-customer groups, and
+    a9_two_level_agg exposes only the two averages."""
+    per_cust = _t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
+        F.max("o_totalprice").alias("mx"), F.count("*").alias("n_orders")
     )
     a9 = per_cust.agg(
         F.lit("a9_two_level").alias("op"),
@@ -422,35 +291,7 @@ def a_grouped_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("n_orders"), 4).alias("v2"),
         F.lit(None).cast("double").alias("v3"),
     )
-    # reuse the registered original (r10 review: the threshold/rounding
-    # previously lived verbatim in both files, free to drift) and
-    # reshape into the suite's row shape
-    a10 = REGISTRY["a10_conditional_share"].fn(spark, sf_dir).select(
-        F.lit("a10_share").alias("op"),
-        F.col("o_orderstatus").alias("k"),
-        "n",
-        F.col("big_share").alias("v1"),
-        F.lit(None).cast("double").alias("v2"),
-        F.lit(None).cast("double").alias("v3"),
-    )
-    li = _t(spark, sf_dir, "lineitem")
-
-    def describe(col: str) -> DataFrame:
-        return li.agg(
-            F.lit("a16_describe").alias("op"),
-            F.lit(col).alias("k"),
-            F.count(col).alias("n"),
-            F.round(F.avg(col), 4).alias("v1"),
-            F.round(F.stddev(col), 4).alias("v2"),
-            F.round(F.max(col), 4).alias("v3"),
-        )
-
-    return (
-        a1.unionByName(a9)
-        .unionByName(a10)
-        .unionByName(describe("l_quantity"))
-        .unionByName(describe("l_discount"))
-    )
+    return _union([*_reduced(spark, sf_dir, _A_COLS, _A_BRANCHES), a9])
 
 
 # ---------------------------------------------------------------------------
@@ -512,56 +353,33 @@ def w_core_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every branch LIMIT-bounded so Catalyst plans TakeOrderedAndProject.
 # ---------------------------------------------------------------------------
 
+_O_COLS = ("src", "k1", "k2", "price")
+_O1 = (_Branch("o1_composite_sort", _O_COLS),)
+
+
 @register(
     "o_order_limit_suite",
-    """
-    SELECT * FROM (
-        SELECT 'composite' AS src, o_custkey AS k1,
-               CAST(o_orderkey AS VARCHAR) AS k2, ROUND(o_totalprice, 2) AS price
-        FROM orders ORDER BY o_custkey, o_orderkey LIMIT 500)
-    UNION ALL
-    SELECT * FROM (
-        SELECT 'topk_value' AS src, p_partkey AS k1, p_name AS k2,
-               ROUND(p_retailprice, 2) AS price
-        FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 15)
-    UNION ALL
+    _union_sql([
+        *_reduced_sql(_O_COLS, _O1),
+        """
     SELECT * FROM (
         SELECT 'topk_recent' AS src, event_id AS k1,
                CAST(CAST(epoch_us(ts) AS BIGINT) AS VARCHAR) AS k2,
                ROUND(value, 2) AS price
         FROM events ORDER BY ts DESC, event_id DESC LIMIT 100)
     """,
+    ]),
 )
 def o_order_limit_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 (composite unit,cycle-style sort) + O2 (top-k by timestamp) +
     O3/O4 (top-k by value, head/limit) in one graded row. All three
     branches are LIMIT-bounded sorts → TakeOrderedAndProject, never a
-    global sort."""
-    o = _t(spark, sf_dir, "orders")
-    composite = (
-        o.orderBy("o_custkey", "o_orderkey")
-        .limit(500)
-        .select(
-            F.lit("composite").alias("src"),
-            F.col("o_custkey").alias("k1"),
-            F.col("o_orderkey").cast("string").alias("k2"),
-            F.round("o_totalprice", 2).alias("price"),
-        )
-    )
-    p = _t(spark, sf_dir, "part")
-    topk_value = (
-        p.orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-        .limit(15)
-        .select(
-            F.lit("topk_value").alias("src"),
-            F.col("p_partkey").alias("k1"),
-            F.col("p_name").alias("k2"),
-            F.round("p_retailprice", 2).alias("price"),
-        )
-    )
-    e = _t(spark, sf_dir, "events")
+    global sort. The composite and top-k-by-value rows are exactly
+    o1_composite_sort's rows; top-k-by-recency stays inline because its
+    row carries ``value``, which o2_topk_recent does not expose."""
     topk_recent = (
-        e.orderBy(F.desc("ts"), F.desc("event_id"))
+        _t(spark, sf_dir, "events")
+        .orderBy(F.desc("ts"), F.desc("event_id"))
         .limit(100)
         .select(
             F.lit("topk_recent").alias("src"),
@@ -570,7 +388,7 @@ def o_order_limit_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 2).alias("price"),
         )
     )
-    return composite.unionByName(topk_value).unionByName(topk_recent)
+    return _union([*_reduced(spark, sf_dir, _O_COLS, _O1), topk_recent])
 
 
 # ---------------------------------------------------------------------------
@@ -585,16 +403,10 @@ def o_order_limit_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window, still selfchecked per round.
 # ---------------------------------------------------------------------------
 
-from turbine_maintenance_etl_spark.queries import REGISTRY  # noqa: E402
-import turbine_maintenance_etl_spark.queries_llm  # noqa: E402,F401  (registers sim/pii entries)
-import turbine_maintenance_etl_spark.queries_ext  # noqa: E402,F401  (registers chunking/session entries)
-
 
 def _wrap_union(parts: list[tuple[str, str]]) -> str:
     """Tag-union complete oracle SELECTs: [(tag, sql)] -> one query."""
-    return "\nUNION ALL\n".join(
-        f"SELECT '{tag}' AS variant, * FROM ({sql})" for tag, sql in parts
-    )
+    return _union_sql([f"SELECT '{tag}' AS variant, * FROM ({sql})" for tag, sql in parts])
 
 
 @register(
@@ -615,17 +427,14 @@ def sim_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same fixed seeded hyperplanes embedded in both engines). The IVF /
     PQ / IVF-PQ cousins carry their own rows-only entries (iterative
     k-means is not SQL-expressible)."""
-    out = None
-    for tag, name in (
-        ("brute", "sim_brute_force_topk"),
-        ("lsh", "sim_lsh_topk"),
-        ("multiprobe", "sim_multiprobe_topk"),
-    ):
-        part = REGISTRY[name].fn(spark, sf_dir).select(
-            F.lit(tag).alias("variant"), "*"
+    return _union([
+        REGISTRY[name].fn(spark, sf_dir).select(F.lit(tag).alias("variant"), "*")
+        for tag, name in (
+            ("brute", "sim_brute_force_topk"),
+            ("lsh", "sim_lsh_topk"),
+            ("multiprobe", "sim_multiprobe_topk"),
         )
-        out = part if out is None else out.unionByName(part)
-    return out
+    ])
 
 
 @register(
@@ -807,9 +616,8 @@ def agg_grouping_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("grouping").alias("variant"), "*"
     )
     pv = REGISTRY["agg_pivot"].fn(spark, sf_dir)
-    melted = None
-    for status in ("O", "F"):
-        part = pv.select(
+    melted = [
+        pv.select(
             F.lit("pivot").alias("variant"),
             F.lit("pivot").alias("src"),
             F.col("l_returnflag").alias("d1"),
@@ -818,8 +626,9 @@ def agg_grouping_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("bigint").alias("n"),
             F.col(f"qty_{status}").alias("measure"),
         )
-        melted = part if melted is None else melted.unionByName(part)
-    return ro.unionByName(melted)
+        for status in ("O", "F")
+    ]
+    return _union([ro, *melted])
 
 
 def _melt_oracle(variant: str, sql: str, keys: list[str], metrics: list[str]) -> str:
@@ -854,10 +663,10 @@ _STATS_SUITE_PARTS = [
 
 @register(
     "a_stats_suite",
-    "\nUNION ALL\n".join(
+    _union_sql([
         f"SELECT * FROM ({_melt_oracle(v, REGISTRY[orig].oracle, ks, ms)})"
         for v, orig, ks, ms in _STATS_SUITE_PARTS
-    ),
+    ]),
 )
 def a_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical-aggregate family in one graded row (round-6 second
