@@ -53,6 +53,14 @@ def fixtures() -> dict[str, tuple[bytes, object]]:
             jpeg.encode_jpeg_progressive(img, quality=90),
             jpeg.decode_jpeg_pixels,
         ),
+        "jpeg_baseline_rst": (
+            jpeg.encode_jpeg_baseline(img, quality=90, restart_interval=1),
+            jpeg.decode_jpeg_pixels,
+        ),
+        "jpeg_progressive_rst": (
+            jpeg.encode_jpeg_progressive(img, quality=90, restart_interval=1),
+            jpeg.decode_jpeg_pixels,
+        ),
         "jpeg_arithmetic": (
             jpeg_arith.encode_jpeg_arith(img, quality=90),
             jpeg.decode_jpeg_pixels,

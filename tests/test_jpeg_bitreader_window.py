@@ -1,12 +1,13 @@
-"""Bounded-memory tests for the round-10 windowed _BitReader
-(llm/jpeg.py): a progressive JPEG without restart intervals is ONE
-entropy segment, and the round-9 reader unpacked it to a whole-segment
-Python bit list (~64 bytes of pointer per entropy byte — gigabytes for
-a multi-MB scan). Round-10 unpacks a fixed 64 KiB byte window at a
-time; these tests pin (a) bit-exact reads across many window refills
-on a multi-MB single segment, (b) that the unpacked list never exceeds
-the window, and (c) full-decoder bit-identity when the window is
-shrunk far below any real Huffman code span (boundary mid-code)."""
+"""Bounded-memory tests for the windowed _BitReader (llm/jpeg.py): a
+JPEG scan without restart intervals is ONE entropy segment, and a
+reader that unpacked it whole would hold ~64 bytes of pointer per
+entropy byte — gigabytes for a multi-MB scan. The reader unpacks a
+fixed ``_WINDOW_BYTES`` chunk at a time; these tests pin (a) bit-exact
+reads across many window refills on a multi-MB single segment, (b)
+that the unpacked list never exceeds the window, and (c) full-decoder
+bit-identity on every Huffman scan decoder (progressive, baseline,
+lossless) when the window is shrunk far below any real Huffman code
+span (boundary mid-code)."""
 
 from __future__ import annotations
 
@@ -73,35 +74,68 @@ def test_mixed_read_sizes_cross_windows_exactly():
         i += n
 
 
-def test_tiny_window_decode_bit_identical(monkeypatch):
+def test_reads_are_bounded_by_the_segment_inside_a_chunk():
+    """One chunk holds both segments' bits here, but no read may start
+    past the current segment's end, and a read that ends past it is
+    caught at the next restart (or ``finish``) before any further bit
+    of the next segment is decoded."""
+    data = b"\xa5\x5a\xff\xd0\x3c\xff\xd9"  # seg 0: A55A, RST0, seg 1: 3C
+    reader = J._BitReader(data, 0)
+    assert len(reader.bits) > 16  # the chunk runs on into segment 1
+    assert reader.read_bits(16) == 0xA55A
+    with pytest.raises(J._SegmentEnd):
+        reader.read_bit()
+    reader.restart()
+    assert reader.read_bits(8) == 0x3C
+    reader.finish()
+    assert reader.scan_end() == 5 and reader.marker == 0xD9
+
+    reader = J._BitReader(data, 0)
+    reader.read_bits(12)
+    reader.read_bits(8)  # ends 4 bits past segment 0
+    with pytest.raises(J._SegmentEnd):
+        reader.restart()
+
+
+def _stream(kind, restart_interval, seed, h, w, quality) -> bytes:
+    px = _noise_image(h, w, seed=seed)
+    if kind == "progressive":
+        return J.encode_jpeg_progressive(px, quality, restart_interval=restart_interval)
+    if kind == "baseline":
+        return J.encode_jpeg_baseline(px, quality, restart_interval=restart_interval)
+    return J.encode_jpeg_lossless(px[:, :, :1], 8, 4, 0, restart_interval)
+
+
+@pytest.mark.parametrize("kind", ["progressive", "baseline", "lossless"])
+def test_tiny_window_decode_bit_identical(monkeypatch, kind):
     """Shrink the window to 3 destuffed bytes (24 bits — smaller than
     a worst-case 16-bit Huffman code + magnitude) and decode a real
-    progressive stream: thousands of refills, codes split mid-window,
-    result must equal the default-window decode bit-for-bit."""
-    px = _noise_image(24, 33, seed=3)
-    blob = J.encode_jpeg_progressive(px, quality=80, restart_interval=0)
+    stream without restarts: thousands of refills, codes split
+    mid-window, result must equal the default-window decode
+    bit-for-bit."""
+    blob = _stream(kind, 0, seed=3, h=24, w=33, quality=80)
     want = J.decode_jpeg_pixels(blob)
     monkeypatch.setattr(J._BitReader, "_WINDOW_BYTES", 3)
     got = J.decode_jpeg_pixels(blob)
     assert np.array_equal(got, want)
 
 
-def test_tiny_window_decode_with_restarts(monkeypatch):
+@pytest.mark.parametrize("kind", ["progressive", "baseline", "lossless"])
+def test_tiny_window_decode_with_restarts(monkeypatch, kind):
     """Same tiny-window identity across DRI/RSTn segment reloads."""
-    px = _noise_image(40, 17, seed=5)
-    blob = J.encode_jpeg_progressive(px, quality=75, restart_interval=2)
+    blob = _stream(kind, 2, seed=5, h=40, w=17, quality=75)
     want = J.decode_jpeg_pixels(blob)
     monkeypatch.setattr(J._BitReader, "_WINDOW_BYTES", 2)
     got = J.decode_jpeg_pixels(blob)
     assert np.array_equal(got, want)
 
 
-def test_truncated_single_segment_still_raises(monkeypatch):
+@pytest.mark.parametrize("kind", ["progressive", "baseline", "lossless"])
+def test_truncated_single_segment_still_raises(monkeypatch, kind):
     """Truncation semantics survive the windowing: a stream cut inside
-    the entropy data (no terminating marker) raises ValueError, not
-    _SegmentEnd, regardless of which window the cut lands in."""
-    px = _noise_image(16, 16, seed=9)
-    blob = J.encode_jpeg_progressive(px, quality=85, restart_interval=0)
+    the entropy data (no terminating marker) raises ValueError,
+    regardless of which window the cut lands in."""
+    blob = _stream(kind, 0, seed=9, h=16, w=16, quality=85)
     monkeypatch.setattr(J._BitReader, "_WINDOW_BYTES", 4)
     with pytest.raises(ValueError):
         J.decode_jpeg_pixels(blob[: len(blob) // 2])

@@ -345,3 +345,106 @@ def test_jpeg_and_png_dimension_caps():
     with pytest.raises(ValueError, match="decode cap"):
         decode_image_pixels(bytes(png))
     assert MAX_FRAME_PIXELS == MAX_IMAGE_PIXELS == 1 << 26
+
+
+# ---- JPEG entropy segments: truncation and fill bytes at RSTn
+
+
+def _entropy_segments(blob: bytes) -> list[tuple[int, int, int]]:
+    """``(start, end, marker)`` raw byte ranges of every entropy-coded
+    segment in ``blob``: ``end`` is the 0xFF of the marker that closes
+    the segment, ``marker`` its code. Walks the header segments by
+    their lengths, so table bytes that look like markers are never
+    mistaken for one."""
+    out, pos = [], 2
+    while pos + 4 <= len(blob):
+        marker = blob[pos + 1]
+        if marker == 0xD9:
+            break
+        (seglen,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
+        pos += 2 + seglen
+        if marker != 0xDA:
+            continue
+        start = pos
+        while True:
+            f = blob.find(b"\xff", pos)
+            nxt = blob[f + 1]
+            if nxt == 0x00:  # stuffed data byte
+                pos = f + 2
+                continue
+            out.append((start, f, nxt))
+            if not 0xD0 <= nxt <= 0xD7:
+                pos = f
+                break
+            start = pos = f + 2
+    return out
+
+
+def _restart_streams() -> dict[str, bytes]:
+    rng = np.random.default_rng(4321)
+    px = rng.integers(0, 256, (32, 40, 3), dtype=np.uint8)
+    gray = rng.integers(0, 256, (16, 24), dtype=np.uint8)
+    return {
+        "baseline": encode_jpeg_baseline(px, quality=85, restart_interval=2),
+        "progressive": encode_jpeg_progressive(px, quality=80, restart_interval=2),
+        "lossless_dri": encode_jpeg_lossless(gray[:, :, None], 8, 4, 0, 3),
+    }
+
+
+@pytest.mark.parametrize("kind", ["baseline", "progressive", "lossless_dri"])
+def test_truncated_restart_segments_raise_or_decode_identically(kind):
+    """Dropping the last entropy byte of any RSTn segment must never
+    decode to different pixels: either the decoder needed the byte and
+    raises ValueError (its reads are bounded by the segment), or the
+    byte held only padding bits and the decode is pixel-identical.
+    Cuts that would split a stuffed ``FF 00`` pair are skipped.
+    Arithmetic streams are exempt: T.81 D.2.4 has the decoder read
+    zero bytes past a segment's end, so a truncated arithmetic segment
+    decodes without any detectable error."""
+    from turbine_maintenance_etl_spark.llm.jpeg import decode_jpeg_pixels
+
+    blob = _restart_streams()[kind]
+    want = decode_jpeg_pixels(blob)
+    wrong, cases = [], 0
+    for start, end, marker in _entropy_segments(blob):
+        if not 0xD0 <= marker <= 0xD7 or end - start < 1:
+            continue
+        if end - start >= 2 and blob[end - 2 : end] == b"\xff\x00":
+            continue
+        cases += 1
+        try:
+            got = decode_jpeg_pixels(blob[: end - 1] + blob[end:])
+        except ValueError:
+            continue
+        if not np.array_equal(got, want):
+            wrong.append(end)
+    assert cases > 5
+    assert wrong == [], f"{len(wrong)} of {cases} truncated segments decoded wrong pixels"
+
+
+@pytest.mark.parametrize(
+    "kind", ["baseline", "progressive", "lossless_dri", "arith", "arith_progressive"]
+)
+def test_fill_bytes_before_restart_markers_decode_identically(kind):
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes.
+    One fill byte before every RSTn marker must decode to the same
+    pixels as the stream without them, on every entropy-coding path."""
+    from turbine_maintenance_etl_spark.llm.jpeg import decode_jpeg_pixels
+    from turbine_maintenance_etl_spark.llm.jpeg_arith import (
+        encode_jpeg_progressive_arith,
+    )
+
+    streams = _restart_streams()
+    px = np.random.default_rng(77).integers(0, 256, (24, 32, 3), dtype=np.uint8)
+    streams["arith"] = encode_jpeg_arith(px, quality=85, restart_interval=2)
+    streams["arith_progressive"] = encode_jpeg_progressive_arith(
+        px, quality=85, restart_interval=2
+    )
+    blob = streams[kind]
+    want = decode_jpeg_pixels(blob)
+    rsts = [end for _s, end, m in _entropy_segments(blob) if 0xD0 <= m <= 0xD7]
+    assert rsts
+    filled = bytearray(blob)
+    for end in reversed(rsts):
+        filled[end:end] = b"\xff"
+    assert np.array_equal(decode_jpeg_pixels(bytes(filled)), want)

@@ -198,7 +198,7 @@ def _decode_map(bits: list[int], vals: list[int]) -> _HuffTable:
 _WIN_SHIFTS = (8 - np.arange(8, dtype=np.uint32))[None, :]
 
 
-def _bit_windows(buf: np.ndarray, byte0: int, nbytes: int):
+def _bit_windows(buf: bytes, byte0: int, nbytes: int):
     """16-bit big-endian bit windows of ``buf[byte0 : byte0+nbytes]``:
     ``win[i]`` holds bits ``[8*byte0+i, 8*byte0+i+16)`` of ``buf``, with
     up to 2 LOOKAHEAD bytes read past the chunk (zero-padded past the
@@ -208,10 +208,10 @@ def _bit_windows(buf: np.ndarray, byte0: int, nbytes: int):
     instead of boxing every entry (``tolist`` measured 13x slower to
     build at chunk size); subscripting an array is one int box per
     READ, and reads are ~4x rarer than bits (one per symbol/field)."""
-    n = min(nbytes, int(buf.size) - byte0)
+    n = min(nbytes, len(buf) - byte0)
     if n <= 0:
         return array("H")
-    chunk = buf[byte0 : byte0 + n + 2].astype(np.uint32)
+    chunk = np.frombuffer(buf, np.uint8)[byte0 : byte0 + n + 2].astype(np.uint32)
     if chunk.size < n + 2:
         chunk = np.concatenate(
             [chunk, np.zeros(n + 2 - chunk.size, dtype=np.uint32)]
@@ -227,95 +227,165 @@ def _bit_windows(buf: np.ndarray, byte0: int, nbytes: int):
 # ---------------------------------------------------------------- decode
 
 
-class _BitReader:
-    """MSB-first reader over entropy-coded bytes, handling 0xFF00 byte
-    stuffing and stopping (raising _SegmentEnd) at any real marker.
+class _SegmentEnd(ValueError):
+    """A read ran past the end of its entropy-coded segment."""
 
-    Round-9 destuffed one whole restart segment up front
-    (``_destuff_to_marker``) and served bits from a whole-segment
-    Python list; round-10 bounded that to a fixed byte WINDOW at a
-    time. Round-11 changes the unpacked representation from single
-    bits to 16-bit LOOKAHEAD WINDOWS (``bits[i]`` = the next 16 bits
-    at bit offset i, built vectorized with 2 real lookahead bytes past
-    the chunk): ``read_bits(n)`` becomes one list index + one shift
-    instead of n list reads, and ``_huff_decode`` resolves a whole
-    symbol from ``bits[p]`` through a flat LUT instead of walking bit
-    by bit. Memory stays window-bounded (~36 B/window entry vs ~8 B/bit
-    — the window is 4x smaller for the same footprint). Semantics are
-    unchanged: reading past the segment's entropy bits raises
-    _SegmentEnd exactly where the old reader met the marker, and
-    ``pos`` exposes the raw stream position of that marker for
-    ``_next_marker``."""
 
-    _WINDOW_BYTES = 1 << 14  # destuffed bytes per unpacked window chunk
+class _Segments:
+    """The entropy-coded segments of one scan, destuffed once by
+    ``_destuff_scan``: segment ``s`` is ``_buf[_bounds[s-1]:_bounds[s]]``
+    and ends at marker ``_markers[s]``, whose 0xFF sits at raw position
+    ``_mposs[s]``. ``restart`` is the only way from one segment to the
+    next, and it accepts only an RSTn marker. The Huffman bit reader
+    and the arithmetic decoder both read through this class; each
+    positions itself at a segment in ``_open(start, stop)``."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data
-        self._load(pos)
-
-    def _load(self, pos: int) -> None:
-        """Destuff the WHOLE remaining scan region — through any RSTn
-        markers, up to the first real marker — in one pass (r11): a
-        restart-heavy stream has thousands of tiny segments, and paying
-        a destuff + window build PER SEGMENT costs more than the
-        segment's decode. Per-segment bit budgets live in ``_bounds``;
-        ``align_to_marker`` just moves the cursor. Reads are guarded by
-        the CURRENT segment's ``_nbits``, so a window that happens to
-        contain the next segment's bits can never leak them: a code or
-        field that fits inside the segment is determined by the
-        segment's own bits alone (prefix property), and one that would
-        cross the boundary errors exactly where the per-segment reader
-        ended."""
-        buf, bounds, markers, mposs = _destuff_scan(self.data, pos)
-        self._buf = np.frombuffer(buf, np.uint8)
-        self._bounds = bounds
-        self._markers = markers
-        self._mposs = mposs
+        self._buf, self._bounds, self._markers, self._mposs = _destuff_scan(data, pos)
         self._seg = 0
-        self._nbits = bounds[0] * 8
-        self._mpos = mposs[0]
-        self.marker = markers[0]
-        self._fill(0)
+        self._open(0, self._bounds[0])
 
-    def _fill(self, abs_bit: int) -> None:
-        """Unpack the chunk holding absolute bit ``abs_bit`` to a
-        16-bit-window LIST. Every entry is a complete window (2
-        lookahead bytes are read past the chunk, zero-padded only past
-        the segment's last byte), so chunk boundaries never split a
-        read — only position bookkeeping changes at a refill. ``self.p``
-        is chunk-relative; ``self._base`` its absolute bit offset."""
-        byte0 = abs_bit >> 3
-        self._base = byte0 << 3
-        self.bits = _bit_windows(self._buf, byte0, self._WINDOW_BYTES)
-        self.p = abs_bit - self._base
-
-    def _advance(self) -> None:
-        """Chunk exhausted at ``self.p``: refill from the next bit, or
-        raise once the segment's entropy bits are spent — the old
-        byte-wise reader met the terminating marker here (_SegmentEnd),
-        or ran off a truncated stream (ValueError)."""
-        abs_bit = self._base + self.p
-        if abs_bit >= self._nbits:
-            self._end()
-        self._fill(abs_bit)
-
-    def _end(self):
-        if self._mpos >= len(self.data):
-            raise ValueError("truncated JPEG entropy stream")
-        raise _SegmentEnd()
+    @property
+    def marker(self) -> int | None:
+        """Code of the marker ending the current segment (None: none)."""
+        return self._markers[self._seg]
 
     @property
     def pos(self) -> int:
-        """Raw stream position of the current segment's terminator —
-        any marker scan from here finds the same marker the old
-        byte-wise reader would have stopped at."""
-        return self._mpos
+        """Raw position of the current segment's terminating marker
+        (``len(data)`` when the stream ends without one)."""
+        return self._mposs[self._seg]
+
+    def finish(self) -> None:
+        """The current segment is decoded (the bit reader checks here
+        that no read ran past its end)."""
+
+    def restart(self) -> None:
+        """Step past the RSTn marker ending the current segment."""
+        self.finish()
+        s = self._seg
+        m = self._markers[s]
+        if m is None:
+            raise ValueError(
+                "truncated JPEG: entropy stream ended, expected RST marker"
+            )
+        if not 0xD0 <= m <= 0xD7:
+            raise ValueError(f"expected RST marker, got 0xFF{m:02X}")
+        self._seg = s + 1
+        self._open(self._bounds[s], self._bounds[s + 1])
+
+    def scan_end(self) -> int:
+        """Raw position of the first non-RST marker after the scan."""
+        if self._markers[-1] is None:
+            raise ValueError("truncated JPEG: expected marker after scan")
+        return self._mposs[-1]
+
+
+class _Restarts:
+    """The restart walk every scan decoder shares: ``unit()`` is
+    called before each MCU (or block of a non-interleaved scan, or
+    sample of a lossless scan); every ``interval`` units it steps
+    ``segments`` past the next RSTn marker, zeroes the predictor dicts
+    ``preds`` and the EOB run in ``state``, and returns True so the
+    caller can reset what else it keeps per interval (hoisted reader
+    locals, arithmetic statistics, the lossless prediction origin)."""
+
+    __slots__ = ("_restart", "_interval", "_left", "_preds", "_state")
+
+    def __init__(self, segments, interval: int, *preds: dict, state=None):
+        self._restart = segments.restart
+        self._interval = self._left = interval
+        self._preds = preds
+        self._state = state
+
+    def unit(self) -> bool:
+        if self._left:
+            self._left -= 1
+            return False
+        if not self._interval:
+            return False
+        self._left = self._interval - 1
+        self._restart()
+        for pred in self._preds:
+            for c in pred:
+                pred[c] = 0
+        if self._state is not None:
+            self._state["eobrun"] = 0
+        return True
+
+
+class _BitReader(_Segments):
+    """MSB-first Huffman bit reader over one scan's segments.
+
+    Bits are served as 16-bit LOOKAHEAD WINDOWS: ``bits[i]`` holds the
+    16 bits starting at chunk-relative bit ``i`` (2 lookahead bytes are
+    unpacked past the chunk), so a read of n <= 16 bits at ``p`` is
+    ``bits[p] >> (16 - n)`` and ``_huff_decode`` resolves a whole code
+    from ``bits[p]`` through the table's LUT. ``_base`` is the chunk's
+    absolute bit offset and ``p`` the chunk-relative cursor.
+
+    Invariants the hot loops rely on (they hoist ``bits``/``p``/``lim``
+    into locals and call ``refill`` whenever ``p >= lim``):
+    - SEGMENT BOUND: ``lim`` is the chunk length clipped at the current
+      segment's end, so every read starts inside the segment and a
+      one-bit read ends inside it. A longer read may look past the end
+      (through the lookahead) and leave the cursor beyond ``lim``; the
+      next read, ``restart`` or ``finish`` then raises. No decode
+      returns, and no next segment is entered, after a read overran —
+      and a code that fits in the segment is determined by its bits
+      alone (prefix property), whatever the lookahead holds.
+    - BOUNDED CHUNKS: one chunk unpacks at most ``_WINDOW_BYTES``
+      destuffed bytes, so memory stays bounded on a multi-MB scan
+      without restarts. A chunk may run on into later segments, so a
+      restart-heavy scan moves the cursor instead of unpacking per
+      segment."""
+
+    _WINDOW_BYTES = 1 << 14  # destuffed bytes per unpacked window chunk
+    bits = array("H")  # no chunk unpacked yet
+    _base = 0
+
+    def _open(self, start: int, stop: int) -> None:
+        self._nbits = stop * 8
+        start_bit = start * 8
+        base, n = self._base, len(self.bits)
+        if base <= start_bit < base + n:  # same chunk: no rebuild
+            self.p = start_bit - base
+            lim = self._nbits - base
+            self.lim = lim if lim < n else n
+        else:
+            self._fill(start_bit)
+
+    def _fill(self, abs_bit: int) -> None:
+        byte0 = abs_bit >> 3
+        self._base = base = byte0 << 3
+        self.bits = _bit_windows(self._buf, byte0, self._WINDOW_BYTES)
+        self.p = abs_bit - base
+        self.lim = min(len(self.bits), self._nbits - base)
+
+    def refill(self, p: int):
+        """Cursor ``p`` reached ``lim``: raise at the segment's end,
+        else unpack the chunk holding ``p``. Returns the new
+        ``(bits, p, lim)`` for the caller's hoisted locals."""
+        abs_bit = self._base + p
+        if abs_bit >= self._nbits:
+            self._end()
+        self._fill(abs_bit)
+        return self.bits, self.p, self.lim
+
+    def finish(self) -> None:
+        if self._base + self.p > self._nbits:
+            self._end()
+
+    def _end(self):
+        if self.pos >= len(self.data):
+            raise ValueError("truncated JPEG entropy stream")
+        raise _SegmentEnd("JPEG entropy stream ended mid-scan")
 
     def read_bit(self) -> int:
         p = self.p
-        if p >= len(self.bits):
-            self._advance()  # raises at segment end; else p < len(bits)
-            p = self.p
+        if p >= self.lim:
+            _, p, _ = self.refill(p)
         self.p = p + 1
         return (self.bits[p] >> 15) & 1
 
@@ -323,54 +393,19 @@ class _BitReader:
         if n <= 0:
             return 0
         p = self.p
-        if p >= len(self.bits):
-            self._advance()
-            p = self.p
-        if self._base + p + n > self._nbits:
-            self._end()
+        if p >= self.lim:
+            _, p, _ = self.refill(p)
         self.p = p + n
         return self.bits[p] >> (16 - n)
-
-    def align_to_marker(self) -> int:
-        """Skip to the current segment's terminating marker pair;
-        returns the marker code and positions at the next segment —
-        a cursor move within the already-destuffed scan when the
-        marker was an RSTn (the common caller), a fresh load after a
-        non-RST marker (callers reject those anyway)."""
-        if self.marker is None:
-            raise ValueError("truncated JPEG: expected marker")
-        m = self.marker
-        s = self._seg + 1
-        if s < len(self._bounds):
-            start_bit = self._bounds[s - 1] * 8
-            self._seg = s
-            self._nbits = self._bounds[s] * 8
-            self._mpos = self._mposs[s]
-            self.marker = self._markers[s]
-            if self._base <= start_bit < self._base + len(self.bits):
-                self.p = start_bit - self._base  # same chunk: no rebuild
-            else:
-                self._fill(start_bit)
-        else:
-            self._load(self._mpos + 2)
-        return m
-
-
-class _SegmentEnd(Exception):
-    """Entropy segment hit a marker (RST/EOI) mid-read."""
 
 
 def _huff_decode(reader: _BitReader, table: _HuffTable) -> int:
     p = reader.p
-    if p >= len(reader.bits):
-        reader._advance()  # raises at segment end; else p < len(bits)
-        p = reader.p
+    if p >= reader.lim:
+        _, p, _ = reader.refill(p)
     w = reader.bits[p]
     ln = table.lut_len[w]
-    if ln == 0 or reader._base + p + ln > reader._nbits:
-        if reader._base + p + 16 > reader._nbits:
-            # the bitwise walk ran out of segment bits mid-code here
-            reader._end()
+    if ln == 0:
         raise ValueError("invalid Huffman code in JPEG stream")
     reader.p = p + ln
     return table.lut_sym[w]
@@ -680,43 +715,18 @@ def _decode_markers(data: bytes) -> np.ndarray:
     raise ValueError("truncated JPEG (no SOS)")
 
 
-def _destuff_to_marker(data: bytes, pos: int):
-    """Destuff entropy-coded bytes from ``pos`` up to the next real
-    marker (0xFF followed by non-zero). Returns (buffer, marker_pos,
-    marker_code) with marker_pos at the 0xFF; (buf, len(data), None)
-    when the stream ends without one. Shared by the round-9 tight-loop
-    entropy decoders (sequential + lossless): destuffing once lets the
-    Huffman walk run on local integer arithmetic instead of three
-    method calls per bit. Round-11: the per-byte Python scan (~1 us per
-    entropy byte) becomes ``bytes.find`` (memchr) hops between 0xFF
-    hits — stuffed pairs splice byte slices, the first real marker
-    terminates."""
-    n = len(data)
-    pieces = []
-    start = p = pos
-    while True:
-        f = data.find(b"\xff", p)
-        if f == -1:
-            pieces.append(data[start:n])
-            return b"".join(pieces), n, None
-        if f + 1 < n and data[f + 1] == 0x00:
-            pieces.append(data[start : f + 1])  # keep the 0xFF, drop the 0x00
-            start = p = f + 2
-            continue
-        pieces.append(data[start:f])
-        return b"".join(pieces), f, (data[f + 1] if f + 1 < n else None)
-
-
 def _destuff_scan(data: bytes, pos: int):
     """Destuff from ``pos`` through any RSTn markers up to (and
-    excluding) the first NON-restart marker — the whole entropy region
-    of one scan in one pass (r11, for ``_BitReader``). Returns
-    ``(buf, bounds, markers, mposs)``: ``buf`` concatenates every
-    segment's destuffed bytes; segment ``i`` ends at byte offset
-    ``bounds[i]`` of ``buf``, is terminated by marker code
+    excluding) the first NON-restart marker: the whole entropy region
+    of one scan in one pass, and the only code that walks entropy bytes
+    to markers. Returns ``(buf, bounds, markers, mposs)``: ``buf``
+    concatenates every segment's destuffed bytes; segment ``i`` ends at
+    byte offset ``bounds[i]`` of ``buf``, is terminated by marker code
     ``markers[i]`` (``None`` when the stream ends without one) whose
     0xFF sits at raw position ``mposs[i]`` (``len(data)`` when none).
-    Scanning uses ``bytes.find`` (memchr), so cost is O(region), not
+    A stuffed ``FF 00`` pair yields one 0xFF byte; a 0xFF fill byte
+    before a marker (T.81 B.1.1.2) is dropped. Scanning uses
+    ``bytes.find`` (memchr), so cost is O(region), not
     O(region x segments)."""
     n = len(data)
     pieces = []
@@ -728,27 +738,23 @@ def _destuff_scan(data: bytes, pos: int):
     while True:
         f = data.find(b"\xff", p)
         if f == -1:
-            pieces.append(data[start:n])
-            cur += n - start
-            bounds.append(cur)
-            markers.append(None)
-            mposs.append(n)
-            return b"".join(pieces), bounds, markers, mposs
+            f = n
         nxt = data[f + 1] if f + 1 < n else None
-        if nxt == 0x00:
-            pieces.append(data[start : f + 1])  # keep the 0xFF, drop the 0x00
-            cur += f + 1 - start
-            start = p = f + 2
+        if nxt == 0x00 or nxt == 0xFF:
+            # keep a stuffed pair's 0xFF and drop its 0x00; drop a fill byte
+            keep = f + 1 if nxt == 0x00 else f
+            pieces.append(data[start:keep])
+            cur += keep - start
+            start = p = keep + 1
             continue
         pieces.append(data[start:f])
         cur += f - start
         bounds.append(cur)
         markers.append(nxt)
         mposs.append(f)
-        if nxt is not None and 0xD0 <= nxt <= 0xD7:
-            start = p = f + 2
-            continue
-        return b"".join(pieces), bounds, markers, mposs
+        if nxt is None or not 0xD0 <= nxt <= 0xD7:
+            return b"".join(pieces), bounds, markers, mposs
+        start = p = f + 2
 
 
 def _decode_scan(data, pos, frame, quant, huff_dc, huff_ac, scan_tabs,
@@ -769,84 +775,43 @@ def _decode_scan(data, pos, frame, quant, huff_dc, huff_ac, scan_tabs,
         ac_t = huff_ac[scan_tabs[cid][1]]
         layout.extend((cid, dc_t, ac_t, tq) for _ in range(hs * vs))
 
-    # phase 1 (round-9): tight-loop entropy decode of every quantized
-    # coefficient over per-restart-segment destuffed buffers — the
-    # generic _BitReader paid three method calls and a stuffing check
-    # per bit (measured 2x on baseline decode). Round-11: the per-bit
-    # Huffman walk (list index + dict get PER BIT) becomes one 16-bit
-    # lookahead-window read resolved through the table's flat LUT, and
-    # magnitude bits are one shift — windows built vectorized per
-    # chunk (_bit_windows), cursor arithmetic all Python ints.
+    # phase 1: tight-loop entropy decode of every quantized coefficient.
+    # The reader's window list, cursor and segment-clipped limit live in
+    # locals (``_BitReader`` invariants): each symbol is one window read
+    # resolved through the table's flat LUT, each magnitude one shift,
+    # and ``refill`` is called whenever the cursor reaches ``lim``.
     # Dequantization and the IDCT batch over all blocks in phase 2.
     pred = {cid: 0 for cid, *_ in comps}
     zig = ZIGZAG
     # preallocated int32 store, one 64-coef row flushed per block: the
-    # tight loop fills a small Python list (fast appends/writes) and
-    # numpy copies it once, so peak memory is ~4 bytes/coef instead of
-    # boxed-int lists of the whole image (r9 review finding)
+    # tight loop fills a small Python list and numpy copies it once, so
+    # peak memory is ~4 bytes/coef
     coefs = np.zeros((n_mcus * len(layout), 64), dtype=np.int32)
     bidx = 0
-    wchunk = _BitReader._WINDOW_BYTES
-    buf, mpos, marker = _destuff_to_marker(data, pos)
-    seg = np.frombuffer(bytes(buf), np.uint8)
-    nbits = int(seg.size) * 8
-    win = _bit_windows(seg, 0, wchunk)
-    wlen = len(win)
-    base = p = 0  # chunk's absolute bit offset / chunk-relative cursor
-    mcu_count = 0
-    _end_err = "JPEG entropy stream ended mid-MCU"
+    reader = _BitReader(data, pos)
+    rst = _Restarts(reader, restart_interval, pred)
+    win, p, lim = reader.bits, reader.p, reader.lim
     for _mcu in range(n_mcus):
-        if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-            if marker is None:
-                raise ValueError(
-                    "truncated JPEG: entropy stream ended, expected RST marker"
-                )
-            if not (0xD0 <= marker <= 0xD7):
-                raise ValueError(f"expected RST marker, got 0xFF{marker:02X}")
-            buf, mpos, marker = _destuff_to_marker(data, mpos + 2)
-            seg = np.frombuffer(bytes(buf), np.uint8)
-            nbits = int(seg.size) * 8
-            win = _bit_windows(seg, 0, wchunk)
-            wlen = len(win)
-            base = p = 0
-            for cid in pred:
-                pred[cid] = 0
-        mcu_count += 1
+        reader.p = p
+        if rst.unit():
+            win, p, lim = reader.bits, reader.p, reader.lim
         for cid, dc_t, ac_t, _tq in layout:
             dlen = dc_t.lut_len
             dsym = dc_t.lut_sym
             alen = ac_t.lut_len
             asym = ac_t.lut_sym
             c = [0] * 64
-            if p >= wlen:  # chunk exhausted: refill at the cursor
-                abs_bit = base + p
-                if abs_bit >= nbits:
-                    raise ValueError(_end_err)
-                byte0 = abs_bit >> 3
-                base = byte0 << 3
-                win = _bit_windows(seg, byte0, wchunk)
-                wlen = len(win)
-                p = abs_bit - base
+            if p >= lim:
+                win, p, lim = reader.refill(p)
             w = win[p]
             sym = dlen[w]  # length first: 0 = no code matches
-            if sym == 0 or base + p + sym > nbits:
-                if base + p + 16 > nbits:
-                    raise ValueError(_end_err)
+            if sym == 0:
                 raise ValueError("invalid Huffman code in JPEG stream")
             p += sym
             sym = dsym[w]
             if sym:
-                if p >= wlen:
-                    abs_bit = base + p
-                    if abs_bit >= nbits:
-                        raise ValueError(_end_err)
-                    byte0 = abs_bit >> 3
-                    base = byte0 << 3
-                    win = _bit_windows(seg, byte0, wchunk)
-                    wlen = len(win)
-                    p = abs_bit - base
-                if base + p + sym > nbits:
-                    raise ValueError(_end_err)
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 v = win[p] >> (16 - sym)
                 p += sym
                 # inline EXTEND (T.81 F.2.2.1)
@@ -854,20 +819,11 @@ def _decode_scan(data, pos, frame, quant, huff_dc, huff_ac, scan_tabs,
             c[0] = pred[cid]
             k = 1
             while k < 64:
-                if p >= wlen:
-                    abs_bit = base + p
-                    if abs_bit >= nbits:
-                        raise ValueError(_end_err)
-                    byte0 = abs_bit >> 3
-                    base = byte0 << 3
-                    win = _bit_windows(seg, byte0, wchunk)
-                    wlen = len(win)
-                    p = abs_bit - base
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 w = win[p]
                 ln = alen[w]
-                if ln == 0 or base + p + ln > nbits:
-                    if base + p + 16 > nbits:
-                        raise ValueError(_end_err)
+                if ln == 0:
                     raise ValueError("invalid Huffman code in JPEG stream")
                 p += ln
                 sym = asym[w]
@@ -880,23 +836,16 @@ def _decode_scan(data, pos, frame, quant, huff_dc, huff_ac, scan_tabs,
                 k += r
                 if k > 63:
                     raise ValueError("AC coefficient index out of range")
-                if p >= wlen:
-                    abs_bit = base + p
-                    if abs_bit >= nbits:
-                        raise ValueError(_end_err)
-                    byte0 = abs_bit >> 3
-                    base = byte0 << 3
-                    win = _bit_windows(seg, byte0, wchunk)
-                    wlen = len(win)
-                    p = abs_bit - base
-                if base + p + sbits > nbits:
-                    raise ValueError(_end_err)
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 v = win[p] >> (16 - sbits)
                 p += sbits
                 c[zig[k]] = v if v >= (1 << (sbits - 1)) else v - (1 << sbits) + 1
                 k += 1
             coefs[bidx] = c
             bidx += 1
+    reader.p = p
+    reader.finish()
 
     # phase 2: vectorized dequant + one batched IDCT over every block
     qmat = np.stack([quant[tq].astype(np.float64) for *_x, tq in layout])
@@ -980,27 +929,19 @@ def _ac_first_prog(reader, ac_t, blk, ss, se, al, state) -> None:
     if state["eobrun"] > 0:
         state["eobrun"] -= 1
         return
-    # hot-path locals (r11): the reader's window list / cursor and the
-    # table LUTs are hoisted so each symbol is one window read + one
-    # LUT index and each magnitude one shift — reader.p is synced back
-    # on every exit path (including before _advance, which may raise)
+    # hot-path locals: the reader's window list / cursor / limit and the
+    # table LUTs are hoisted so each symbol is one window read + one LUT
+    # index and each magnitude one shift; reader.p is synced on exit
     lut_len = ac_t.lut_len
     lut_sym = ac_t.lut_sym
-    win, p, wlen = reader.bits, reader.p, len(reader.bits)
-    base, nbits = reader._base, reader._nbits
+    win, p, lim = reader.bits, reader.p, reader.lim
     k = ss
     while k <= se:
-        if p >= wlen:
-            reader.p = p
-            reader._advance()  # raises at segment end
-            win, p, wlen = reader.bits, reader.p, len(reader.bits)
-            base = reader._base
+        if p >= lim:
+            win, p, lim = reader.refill(p)
         w = win[p]
         ln = lut_len[w]
-        if ln == 0 or base + p + ln > nbits:
-            reader.p = p
-            if base + p + 16 > nbits:
-                reader._end()
+        if ln == 0:
             raise ValueError("invalid Huffman code in JPEG stream")
         p += ln
         rs = lut_sym[w]
@@ -1012,31 +953,17 @@ def _ac_first_prog(reader, ac_t, blk, ss, se, al, state) -> None:
             # EOBn: run of (1<<r)+ext blocks ending here, incl. this one
             eob = (1 << r) - 1
             if r:
-                if p >= wlen:
-                    reader.p = p
-                    reader._advance()
-                    win, p, wlen = reader.bits, reader.p, len(reader.bits)
-                    base = reader._base
-                if base + p + r > nbits:
-                    reader.p = p
-                    reader._end()
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 eob += win[p] >> (16 - r)
                 p += r
             state["eobrun"] = eob
-            reader.p = p
-            return
+            break
         k += r
         if k > se:
-            reader.p = p
             raise ValueError("AC coefficient index out of range")
-        if p >= wlen:
-            reader.p = p
-            reader._advance()
-            win, p, wlen = reader.bits, reader.p, len(reader.bits)
-            base = reader._base
-        if base + p + s > nbits:
-            reader.p = p
-            reader._end()
+        if p >= lim:
+            win, p, lim = reader.refill(p)
         v = win[p] >> (16 - s)
         p += s
         # point transform inverse: value << Al (sign-preserving — Python
@@ -1050,30 +977,23 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
     p1, m1 = 1 << al, -(1 << al)
     # work on a plain-int copy of the band: the loop below reads/tests
     # every position (often several times across ZRL runs), and numpy
-    # int64 scalar compares/updates cost ~10x a list element (r11,
-    # measured ~35% of the whole progressive decode); one tolist + one
-    # slice write-back replaces hundreds of boxed-scalar round-trips.
-    # Reader window/cursor hoisted to locals like _ac_first_prog.
+    # int64 scalar compares/updates cost ~10x a list element (measured
+    # ~35% of the whole progressive decode); one tolist + one slice
+    # write-back replaces hundreds of boxed-scalar round-trips.
+    # Reader locals hoisted like _ac_first_prog.
     b = blk.tolist() if hasattr(blk, "tolist") else blk
     lut_len = ac_t.lut_len
     lut_sym = ac_t.lut_sym
-    win, p, wlen = reader.bits, reader.p, len(reader.bits)
-    base, nbits = reader._base, reader._nbits
+    win, p, lim = reader.bits, reader.p, reader.lim
 
     k = ss
     if state["eobrun"] == 0:
         while k <= se:
-            if p >= wlen:
-                reader.p = p
-                reader._advance()  # raises at segment end
-                win, p, wlen = reader.bits, reader.p, len(reader.bits)
-                base = reader._base
+            if p >= lim:
+                win, p, lim = reader.refill(p)
             w = win[p]
             ln = lut_len[w]
-            if ln == 0 or base + p + ln > nbits:
-                reader.p = p
-                if base + p + 16 > nbits:
-                    reader._end()
+            if ln == 0:
                 raise ValueError("invalid Huffman code in JPEG stream")
             p += ln
             rs = lut_sym[w]
@@ -1083,29 +1003,19 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
                 if r != 15:  # EOBn: remaining coefficients refine below
                     eob = 1 << r
                     if r:
-                        if p >= wlen:
-                            reader.p = p
-                            reader._advance()
-                            win, p, wlen = reader.bits, reader.p, len(reader.bits)
-                            base = reader._base
-                        if base + p + r > nbits:
-                            reader.p = p
-                            reader._end()
+                        if p >= lim:
+                            win, p, lim = reader.refill(p)
                         eob += win[p] >> (16 - r)
                         p += r
                     state["eobrun"] = eob
                     break
                 # r == 15: ZRL — skip 16 zero-history positions
             elif s == 1:
-                if p >= wlen:
-                    reader.p = p
-                    reader._advance()
-                    win, p, wlen = reader.bits, reader.p, len(reader.bits)
-                    base = reader._base
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 val = p1 if win[p] >> 15 else m1
                 p += 1
             else:
-                reader.p = p
                 raise ValueError("invalid magnitude in AC refinement scan")
             while k <= se:
                 bk = b[k]
@@ -1114,11 +1024,8 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
                     # magnitude is a multiple of 2^Al here, so the
                     # two's-complement bit test equals the magnitude-bit
                     # test (libjpeg's invariant)
-                    if p >= wlen:
-                        reader.p = p
-                        reader._advance()
-                        win, p, wlen = reader.bits, reader.p, len(reader.bits)
-                        base = reader._base
+                    if p >= lim:
+                        win, p, lim = reader.refill(p)
                     hit = win[p] >> 15
                     p += 1
                     if hit and (bk & p1) == 0:
@@ -1138,11 +1045,8 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
         while k <= se:
             bk = b[k]
             if bk != 0:
-                if p >= wlen:
-                    reader.p = p
-                    reader._advance()
-                    win, p, wlen = reader.bits, reader.p, len(reader.bits)
-                    base = reader._base
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 hit = win[p] >> 15
                 p += 1
                 if hit and (bk & p1) == 0:
@@ -1152,22 +1056,6 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
     reader.p = p
     if b is not blk:
         blk[ss : se + 1] = b[ss : se + 1]
-
-
-def _next_marker(data: bytes, p: int) -> int:
-    """Position of the next real marker's 0xFF at/after ``p``, skipping
-    entropy bytes, stuffed 0xFF00 pairs, and stray RSTn markers."""
-    while p + 1 < len(data):
-        if data[p] == 0xFF and data[p + 1] != 0x00:
-            if 0xD0 <= data[p + 1] <= 0xD7:
-                p += 2
-                continue
-            if data[p + 1] == 0xFF:  # fill byte
-                p += 1
-                continue
-            return p
-        p += 1
-    raise ValueError("truncated JPEG: expected marker after scan")
 
 
 def _decode_scan_progressive(data, pos, frame, coef, huff_dc, huff_ac,
@@ -1182,60 +1070,46 @@ def _decode_scan_progressive(data, pos, frame, coef, huff_dc, huff_ac,
     reader = _BitReader(data, pos)
     state = {"eobrun": 0}
     pred = {cid: 0 for cid in scan_tabs}
-    n_units = 0
-
-    def maybe_restart() -> None:
-        nonlocal n_units
-        if restart_interval and n_units and n_units % restart_interval == 0:
-            m = reader.align_to_marker()
-            if not (0xD0 <= m <= 0xD7):
-                raise ValueError(f"expected RST marker, got 0xFF{m:02X}")
-            for c in pred:
-                pred[c] = 0
-            state["eobrun"] = 0
-        n_units += 1
-
-    try:
-        if ss == 0 and len(scan_tabs) > 1:
-            # interleaved DC scan: MCU order over the scan components
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for cid, (td, _ta) in scan_tabs.items():
-                        hs, vs = byid[cid]
-                        for by in range(vs):
-                            for bx in range(hs):
-                                blk = coef[cid][my * vs + by, mx * hs + bx]
-                                if ah == 0:
-                                    _dc_first_prog(
-                                        reader, huff_dc[td], blk, pred, cid, al
-                                    )
-                                else:
-                                    _dc_refine_prog(reader, blk, al)
-        else:
-            # non-interleaved scan: the component's own block raster
-            ((cid, (td, ta)),) = scan_tabs.items()
-            hs, vs = byid[cid]
-            bw = (-(-(w * hs) // hmax) + 7) // 8
-            bh = (-(-(h * vs) // vmax) + 7) // 8
-            for by in range(bh):
-                for bx in range(bw):
-                    maybe_restart()
-                    blk = coef[cid][by, bx]
-                    if ss == 0:
-                        if ah == 0:
-                            _dc_first_prog(reader, huff_dc[td], blk, pred, cid, al)
-                        else:
-                            _dc_refine_prog(reader, blk, al)
-                    elif ah == 0:
-                        _ac_first_prog(reader, huff_ac[ta], blk, ss, se, al, state)
+    rst = _Restarts(reader, restart_interval, pred, state=state)
+    if ss == 0 and len(scan_tabs) > 1:
+        # interleaved DC scan: MCU order over the scan components
+        mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+        mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+        for my in range(mcus_y):
+            for mx in range(mcus_x):
+                rst.unit()
+                for cid, (td, _ta) in scan_tabs.items():
+                    hs, vs = byid[cid]
+                    for by in range(vs):
+                        for bx in range(hs):
+                            blk = coef[cid][my * vs + by, mx * hs + bx]
+                            if ah == 0:
+                                _dc_first_prog(
+                                    reader, huff_dc[td], blk, pred, cid, al
+                                )
+                            else:
+                                _dc_refine_prog(reader, blk, al)
+    else:
+        # non-interleaved scan: the component's own block raster
+        ((cid, (td, ta)),) = scan_tabs.items()
+        hs, vs = byid[cid]
+        bw = (-(-(w * hs) // hmax) + 7) // 8
+        bh = (-(-(h * vs) // vmax) + 7) // 8
+        for by in range(bh):
+            for bx in range(bw):
+                rst.unit()
+                blk = coef[cid][by, bx]
+                if ss == 0:
+                    if ah == 0:
+                        _dc_first_prog(reader, huff_dc[td], blk, pred, cid, al)
                     else:
-                        _ac_refine_prog(reader, huff_ac[ta], blk, ss, se, al, state)
-    except _SegmentEnd:
-        raise ValueError("JPEG entropy stream ended mid-scan") from None
-    return _next_marker(data, reader.pos)
+                        _dc_refine_prog(reader, blk, al)
+                elif ah == 0:
+                    _ac_first_prog(reader, huff_ac[ta], blk, ss, se, al, state)
+                else:
+                    _ac_refine_prog(reader, huff_ac[ta], blk, ss, se, al, state)
+    reader.finish()
+    return reader.scan_end()
 
 
 def _assemble_progressive(frame, coef, quant) -> np.ndarray:
@@ -1500,7 +1374,7 @@ def _write_signed(wr, v: int, s: int) -> None:
 
 def _emit_rst(wr, n_units: int, rst: int) -> bool:
     """Emit an RSTn boundary before unit ``n_units`` when the restart
-    interval divides it (the decoder's maybe_restart mirror). Returns
+    interval divides it (the decoder's ``_Restarts`` mirror). Returns
     True when a marker was written — callers must reset their
     cross-unit state (DC predictors, EOB runs) exactly like a decoder
     would."""
@@ -1969,48 +1843,28 @@ def _lossless_predict(rec, y, x, psel, default, rs=(0, 0)):
 
 def _decode_lossless_diffs(data: bytes, pos: int, h: int, w: int,
                            order: list, tabs: dict) -> dict:
-    """Phase 1 of the two-phase lossless decode: entropy-decode every
-    prediction residual in one tight loop over a PRE-DESTUFFED buffer
-    (round-9). The generic _BitReader pays three method calls and a
-    stuffing check per bit; destuffing once up front (0xFF00 -> 0xFF,
-    any real marker terminates the segment, same semantics) lets the
-    Huffman walk run on local integer arithmetic — measured ~1.7x on
-    the whole SOF3 decode on top of the vectorized reconstruction."""
-    buf, _mpos, _marker = _destuff_to_marker(data, pos)
+    """Phase 1 of the two-phase lossless decode of a scan without
+    restarts: entropy-decode every prediction residual in one tight
+    loop, with the reader's window list, cursor and segment-clipped
+    limit hoisted into locals like ``_decode_scan`` (see the
+    ``_BitReader`` invariants)."""
     # preallocated int32 planes + per-row Python buffers: the tight
-    # loop appends to small lists (fast) and flushes one numpy row per
-    # scanline, so peak memory stays ~4 bytes/sample instead of a
-    # boxed-int list of every diff (r9 review finding). Round-11: the
-    # per-bit Huffman walk becomes one 16-bit-window LUT lookup and
-    # magnitude bits one shift, same as _decode_scan.
+    # loop appends to small lists and flushes one numpy row per
+    # scanline, so peak memory stays ~4 bytes/sample
     out = {cid: np.zeros((h, w), dtype=np.int32) for cid in order}
     luts = [(tabs[cid].lut_len, tabs[cid].lut_sym) for cid in order]
-    wchunk = _BitReader._WINDOW_BYTES
-    seg = np.frombuffer(bytes(buf), np.uint8)
-    nbits = int(seg.size) * 8
-    win = _bit_windows(seg, 0, wchunk)
-    wlen = len(win)
-    base = p = 0
-    _end_err = "JPEG entropy stream ended mid-scan"
+    reader = _BitReader(data, pos)
+    win, p, lim = reader.bits, reader.p, reader.lim
     for y in range(h):
         rows: list[list[int]] = [[] for _ in order]
         appends = [r.append for r in rows]
         for _x in range(w):
             for (tlen, tsym), app in zip(luts, appends):
-                if p >= wlen:  # chunk exhausted: refill at the cursor
-                    abs_bit = base + p
-                    if abs_bit >= nbits:
-                        raise ValueError(_end_err)
-                    byte0 = abs_bit >> 3
-                    base = byte0 << 3
-                    win = _bit_windows(seg, byte0, wchunk)
-                    wlen = len(win)
-                    p = abs_bit - base
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 w16 = win[p]
                 ln = tlen[w16]
-                if ln == 0 or base + p + ln > nbits:
-                    if base + p + 16 > nbits:
-                        raise ValueError(_end_err)
+                if ln == 0:
                     raise ValueError("invalid Huffman code in JPEG stream")
                 p += ln
                 sym = tsym[w16]
@@ -2020,22 +1874,15 @@ def _decode_lossless_diffs(data: bytes, pos: int, h: int, w: int,
                 if sym == 0:
                     app(0)
                     continue
-                if p >= wlen:
-                    abs_bit = base + p
-                    if abs_bit >= nbits:
-                        raise ValueError(_end_err)
-                    byte0 = abs_bit >> 3
-                    base = byte0 << 3
-                    win = _bit_windows(seg, byte0, wchunk)
-                    wlen = len(win)
-                    p = abs_bit - base
-                if base + p + sym > nbits:
-                    raise ValueError(_end_err)
+                if p >= lim:
+                    win, p, lim = reader.refill(p)
                 v = win[p] >> (16 - sym)
                 p += sym
                 app(v if v >= (1 << (sym - 1)) else v - (1 << sym) + 1)
         for cid, row in zip(order, rows):
             out[cid][y] = row
+    reader.p = p
+    reader.finish()
     return out
 
 
@@ -2110,40 +1957,31 @@ def _decode_scan_lossless(data, pos, frame, huff_dc, scan_tabs, psel, pt,
     tabs = {cid: huff_dc[scan_tabs[cid][0]] for cid, *_ in comps}
     order = [cid for cid, *_ in comps]
     if not restart_interval:
-        # two-phase fast path (round-9): tight-loop entropy pass over a
-        # destuffed buffer, then vectorized prediction recurrences. A
-        # DRI stream resets the recurrence mid-array, so it keeps the
-        # scalar path below.
+        # two-phase fast path: tight-loop entropy pass, then vectorized
+        # prediction recurrences. A DRI stream resets the recurrence
+        # mid-array, so it keeps the scalar one-pass path below.
         diffs = _decode_lossless_diffs(data, pos, h, w, order, tabs)
         for cid in order:
             planes[cid] = _reconstruct_lossless(diffs[cid], psel, default)
     else:
         reader = _BitReader(data, pos)
-        n = 0
+        rst = _Restarts(reader, restart_interval)
         rs = (0, 0)  # current restart interval's origin (T.81 H.1.2.1:
         # an RSTn resets prediction exactly as at the start of the scan)
-        try:
-            for y in range(h):
-                for x in range(w):
-                    if n and n % restart_interval == 0:
-                        m = reader.align_to_marker()
-                        if not (0xD0 <= m <= 0xD7):
-                            raise ValueError(
-                                f"expected RST marker, got 0xFF{m:02X}"
-                            )
-                        rs = (y, x)
-                    n += 1
-                    for cid in order:
-                        t = _huff_decode(reader, tabs[cid])
-                        if t == 16:  # the category without extra bits
-                            diff = 32768
-                        else:
-                            diff = _extend(reader.read_bits(t), t) if t else 0
-                        rec = planes[cid]
-                        pred = _lossless_predict(rec, y, x, psel, default, rs)
-                        rec[y, x] = (pred + diff) % 65536
-        except _SegmentEnd:
-            raise ValueError("JPEG entropy stream ended mid-scan") from None
+        for y in range(h):
+            for x in range(w):
+                if rst.unit():
+                    rs = (y, x)
+                for cid in order:
+                    t = _huff_decode(reader, tabs[cid])
+                    if t == 16:  # the category without extra bits
+                        diff = 32768
+                    else:
+                        diff = _extend(reader.read_bits(t), t) if t else 0
+                    rec = planes[cid]
+                    pred = _lossless_predict(rec, y, x, psel, default, rs)
+                    rec[y, x] = (pred + diff) % 65536
+        reader.finish()
     maxv = (1 << prec) - 1
     out = np.stack(
         [np.clip(planes[cid] << pt, 0, maxv) for cid, *_ in comps], axis=2

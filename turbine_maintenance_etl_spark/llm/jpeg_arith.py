@@ -36,6 +36,8 @@ import struct
 
 import numpy as np
 
+from .jpeg import _Restarts, _Segments, _assemble_progressive
+
 # ------------------------------------------------------------ Table D.3
 #
 # (Qe, NMPS, NLPS, SWITCH) per state.  Entry 113 is the conventional
@@ -232,40 +234,26 @@ class ArithEncoder:
         return bytes(self.out)
 
 
-class ArithDecoder:
-    """T.81 D.2 binary arithmetic decoder over byte-stuffed entropy
-    data.  Bits 16..31 of ``c`` hold the comparison window; new bytes
-    enter at bits 8..15 during renormalization.  On reaching a marker
-    the decoder feeds zero bytes (D.2.4 note) and leaves ``pos`` at
-    the marker's 0xFF so the caller can locate RSTn/EOI."""
+class ArithDecoder(_Segments):
+    """T.81 D.2 binary arithmetic decoder over one scan's entropy
+    segments.  Bits 16..31 of ``c`` hold the comparison window; new
+    bytes enter at bits 8..15 during renormalization.  Bytes come
+    destuffed from ``_destuff_scan``; past the current segment's end
+    the decoder reads zero bytes (D.2.4), and ``restart`` re-initializes
+    it at the next segment."""
 
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.marker: int | None = None
+    def _open(self, start: int, stop: int) -> None:
+        self._i, self._stop = start, stop
         self.c = (self._in_byte() << 24) | (self._in_byte() << 16)
         self.a = 0x10000
         self.ct = 0
 
     def _in_byte(self) -> int:
-        d, p = self.data, self.pos
-        if self.marker is not None or p >= len(d):
+        i = self._i
+        if i >= self._stop:
             return 0
-        b = d[p]
-        if b != 0xFF:
-            self.pos = p + 1
-            return b
-        # swallow 0xFF fill bytes, then classify the byte after
-        q = p + 1
-        while q < len(d) and d[q] == 0xFF:
-            q += 1
-        if q < len(d) and d[q] == 0x00:
-            self.pos = q + 1
-            return 0xFF  # stuffed data byte
-        # a real marker: do not consume, feed zeros from now on
-        self.marker = d[q] if q < len(d) else 0xD9
-        self.pos = q - 1  # position of the marker's 0xFF
-        return 0
+        self._i = i + 1
+        return self._buf[i]
 
     def decode(self, st: bytearray, i: int) -> int:
         sv = st[i]
@@ -629,35 +617,11 @@ def _ac_refine_encode_arith(enc, ac_st, blk, ss, se, al) -> None:
 # ------------------------------------------------- scan-level decode
 
 
-def _expect_rst(data: bytes, pos: int) -> int:
-    """Skip any unconsumed entropy bytes from ``pos`` to the next real
-    marker, verify it is RSTn, and return the position after it."""
-    p = pos
-    while p < len(data):
-        if data[p] != 0xFF:
-            p += 1
-            continue
-        q = p + 1
-        while q < len(data) and data[q] == 0xFF:
-            q += 1  # fill bytes
-        if q < len(data) and data[q] == 0x00:
-            p = q + 1  # stuffed data byte
-            continue
-        if q >= len(data):
-            break
-        if not (0xD0 <= data[q] <= 0xD7):
-            raise ValueError(f"expected RST marker, got 0xFF{data[q]:02X}")
-        return q + 1
-    raise ValueError("truncated JPEG at restart boundary")
-
-
 def decode_scan_sequential(data, pos, frame, quant, scan_tabs, dc_cond,
                            ac_kx, restart_interval) -> np.ndarray:
     """Decode the single interleaved sequential-arithmetic scan of a
     SOF9 frame and assemble the image (shared dequant/IDCT/color
     tail)."""
-    from .jpeg import _assemble_progressive
-
     h, w, comps, prec = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -671,16 +635,11 @@ def decode_scan_sequential(data, pos, frame, quant, scan_tabs, dc_cond,
     ctx = {cid: 0 for cid, *_ in comps}
     pred = {cid: 0 for cid, *_ in comps}
     dec = ArithDecoder(data, pos)
-    n = 0
+    rst = _Restarts(dec, restart_interval, pred, ctx)
     for my in range(mcus_y):
         for mx in range(mcus_x):
-            if restart_interval and n and n % restart_interval == 0:
-                dec = ArithDecoder(data, _expect_rst(data, dec.pos))
+            if rst.unit():
                 stats.reset()
-                for cid in pred:
-                    pred[cid] = 0
-                    ctx[cid] = 0
-            n += 1
             for cid, hs, vs, _tq in comps:
                 td, ta = scan_tabs[cid]
                 dc_st = stats.dc_bins(td)
@@ -701,8 +660,6 @@ def decode_scan_progressive(data, pos, frame, coef, scan_tabs, dc_cond,
                             restart_interval) -> int:
     """Decode one progressive-arithmetic scan into the shared
     coefficient store; returns the byte position of the next marker."""
-    from .jpeg import _next_marker
-
     h, w, comps, prec = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -711,25 +668,15 @@ def decode_scan_progressive(data, pos, frame, coef, scan_tabs, dc_cond,
     ctx = {cid: 0 for cid in scan_tabs}
     pred = {cid: 0 for cid in scan_tabs}
     dec = ArithDecoder(data, pos)
-    n_units = 0
-
-    def maybe_restart() -> None:
-        nonlocal n_units, dec
-        if restart_interval and n_units and n_units % restart_interval == 0:
-            dec = ArithDecoder(data, _expect_rst(data, dec.pos))
-            stats.reset()
-            for c in pred:
-                pred[c] = 0
-                ctx[c] = 0
-        n_units += 1
-
+    rst = _Restarts(dec, restart_interval, pred, ctx)
     if ss == 0 and len(scan_tabs) > 1:
         # interleaved DC scan, MCU order
         mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
         mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
         for my in range(mcus_y):
             for mx in range(mcus_x):
-                maybe_restart()
+                if rst.unit():
+                    stats.reset()
                 for cid, (td, _ta) in scan_tabs.items():
                     hs, vs = byid[cid]
                     dc_st = stats.dc_bins(td)
@@ -755,7 +702,8 @@ def decode_scan_progressive(data, pos, frame, coef, scan_tabs, dc_cond,
         kx = ac_kx.get(ta, _DEFAULT_AC_KX)
         for by in range(bh):
             for bx in range(bw):
-                maybe_restart()
+                if rst.unit():
+                    stats.reset()
                 blk = coef[cid][by, bx]
                 if ss == 0:
                     if ah == 0:
@@ -766,7 +714,7 @@ def decode_scan_progressive(data, pos, frame, coef, scan_tabs, dc_cond,
                     _ac_first_arith(dec, ac_st, blk, ss, se, al, kx)
                 else:
                     _ac_refine_arith(dec, ac_st, blk, ss, se, al)
-    return _next_marker(data, dec.pos)
+    return dec.scan_end()
 
 
 # ------------------------------------------------- container encoders
@@ -824,7 +772,7 @@ def _sos_header(scan_comps, ss, se, ah, al) -> bytes:
 class _ScanEncoder:
     """Per-scan arithmetic coding state with restart-boundary plumbing:
     flushes the coder, emits RSTn, and resets statistics + DC state
-    exactly like the decoder's maybe_restart mirror."""
+    exactly like the decoder's restart walk (``_Restarts``)."""
 
     def __init__(self, comps, rst: int) -> None:
         self.enc = ArithEncoder()
