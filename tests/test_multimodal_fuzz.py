@@ -1,12 +1,12 @@
 """Corrupted-stream fuzzing for the multimodal dispatch (r9 verdict
 item 5): a 100 TB corpus pass WILL meet truncated and bit-flipped
-media, and the poison-pill contract (multimodal.py image_phash /
-audio_fingerprint) only catches (ValueError, NotImplementedError,
+media, and every decode operator pills a row only for the shared catch
+tuple ``multimodal._CORRUPT_MEDIA`` (ValueError, NotImplementedError,
 struct.error, zlib.error) — any other exception type escaping a codec
 kills the executor task, and an unbounded loop or allocation hangs it.
 Hypothesis drives random truncations, byte flips, slice replacements
 and garbage appends over every codec family's valid fixtures, and one
-Spark test runs a corrupted corpus end-to-end through both operators
+Spark test per decode operator runs a corrupted corpus end-to-end,
 asserting every row survives as data-or-tagged-NULL."""
 
 from __future__ import annotations
@@ -37,8 +37,9 @@ from turbine_maintenance_etl_spark.llm.adpcm import (
     encode_wav_ms_adpcm,
 )
 
-# exception types the mapInPandas poison-pill handlers catch — anything
-# else escaping a decoder is an executor-crash vector
+# exception types each decoder may raise for corrupt input, all inside
+# multimodal._CORRUPT_MEDIA — anything else escaping a decoder is an
+# executor-crash vector
 IMAGE_PILL = (ValueError, NotImplementedError, struct.error, zlib.error)
 AUDIO_PILL = (ValueError, NotImplementedError, struct.error)
 
@@ -148,42 +149,65 @@ def test_arbitrary_bytes_never_escape_the_pill(data):
         pass
 
 
-def test_corrupted_corpus_survives_spark_operators(spark):
-    """End-to-end: a mixed valid/corrupted media corpus through the
-    REAL Arrow-batched operators — every input row comes back exactly
-    once, corrupted rows as NULL hash + err tag, valid rows hashed."""
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        audio_fingerprint,
-        image_phash,
-    )
-
+def _corrupted_corpus(blobs: list[bytes]) -> list[tuple[int, bytearray]]:
+    """Each valid blob (ids divisible by 5) followed by its four
+    corruptions, one per _corrupt mode."""
     rng = np.random.default_rng(7)
-    img_rows, wav_rows = [], []
-    i = 0
-    for blob in IMAGE_BLOBS:
-        img_rows.append((i, bytearray(blob))); i += 1
+    rows = []
+    for blob in blobs:
+        rows.append((len(rows), bytearray(blob)))
         for mode in range(4):
-            img_rows.append((i, bytearray(_corrupt(blob, mode, rng)))); i += 1
-    for blob in AUDIO_BLOBS:
-        wav_rows.append((i, bytearray(blob))); i += 1
-        for mode in range(4):
-            wav_rows.append((i, bytearray(_corrupt(blob, mode, rng)))); i += 1
+            rows.append((len(rows), bytearray(_corrupt(blob, mode, rng))))
+    return rows
 
-    img_df = spark.createDataFrame(img_rows, "doc_id bigint, media binary")
-    ph = image_phash(img_df).toPandas().set_index("doc_id")
-    assert len(ph) == len(img_rows)
-    # every row is decoded-or-tagged, never both, never neither
-    assert ((ph["dhash"].notna()) ^ (ph["err"].notna())).all()
-    # the pristine blobs all decode
-    pristine = [r[0] for j, r in enumerate(img_rows) if j % 5 == 0]
-    assert ph.loc[pristine, "dhash"].notna().all()
 
-    wav_df = spark.createDataFrame(wav_rows, "doc_id bigint, media binary")
-    fp = audio_fingerprint(wav_df).toPandas().set_index("doc_id")
-    assert len(fp) == len(wav_rows)
-    assert ((fp["afp"].notna()) ^ (fp["err"].notna())).all()
-    pristine = [r[0] for j, r in enumerate(wav_rows) if j % 5 == 0]
-    assert fp.loc[pristine, "afp"].notna().all()
+# operator -> (corpus, id column, data columns, err column or None)
+_OPERATORS = {
+    "extract_image_features": ("IMAGE", "doc_id", ["width", "height", "channels"], None),
+    "resize_images": ("IMAGE", "doc_id", ["resized", "out_width", "channels"], "err"),
+    "image_phash": ("IMAGE", "doc_id", ["dhash", "ahash", "width"], "err"),
+    "extract_audio_features": ("AUDIO", "doc_id", ["sample_rate", "rms", "peak"], None),
+    "resample_audio": ("AUDIO", "doc_id", ["resampled", "out_rate", "n_frames"], "err"),
+    "audio_fingerprint": ("AUDIO", "doc_id", ["afp", "n_frames"], "err"),
+    "explode_avi_frames": ("AVI", "video_id", ["frame_idx", "media"], "err"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OPERATORS))
+def test_corrupted_corpus_survives_spark_operators(spark, op):
+    """End-to-end: a mixed valid/corrupted media corpus through each
+    REAL Arrow-batched decode operator — every input row comes back
+    (one output row, or for AVI its frames or one pill row), each
+    output row carries data or an error tag, never both and never
+    neither, and every pristine blob decodes."""
+    from turbine_maintenance_etl_spark.llm import avi, multimodal
+
+    kind, id_col, data_cols, err_col = _OPERATORS[op]
+    blobs = {"IMAGE": IMAGE_BLOBS, "AUDIO": AUDIO_BLOBS, "AVI": AVI_BLOBS}[kind]
+    rows = _corrupted_corpus(blobs)
+    fn = getattr(avi if kind == "AVI" else multimodal, op)
+    args = (8, 8) if op == "resize_images" else ()
+    df = spark.createDataFrame(rows, f"{id_col} bigint, media binary")
+    out = fn(df, *args, id_col=id_col).toPandas()
+
+    has_data = out[data_cols].notna()
+    # a row's data columns are all set or all NULL
+    assert (has_data.all(axis=1) | ~has_data.any(axis=1)).all()
+    decoded = has_data.all(axis=1)
+    if err_col is not None:
+        assert (decoded ^ out[err_col].notna()).all()
+    per_id = out.groupby(id_col).size()
+    assert sorted(per_id.index) == [r[0] for r in rows]
+    if kind == "AVI":
+        # a pill row stands alone; decoded rows are numbered frames
+        pills = out[~decoded]
+        assert (per_id[pills[id_col]] == 1).all()
+        frames = out[decoded].groupby(id_col)["frame_idx"].apply(list)
+        assert all(f == list(range(len(f))) for f in frames)
+    else:
+        assert (per_id == 1).all()
+    pristine = out[out[id_col] % 5 == 0]
+    assert decoded[pristine.index].all()
 
 
 def test_header_dimension_extremes_pill_fast():
@@ -225,8 +249,8 @@ def test_header_dimension_extremes_pill_fast():
         decode_wav_samples(bytes(wv))
 
 
-# ---- AVI container (llm/avi.py) — the pill is (ValueError,
-# struct.error), per explode_avi_frames' catch list
+# ---- AVI container (llm/avi.py) — the demuxer raises only (ValueError,
+# struct.error), a subset of the operators' shared catch tuple
 
 AVI_PILL = (ValueError, struct.error)
 

@@ -265,8 +265,26 @@ def test_extract_image_features_poison_pill_real_decoder(spark):
     )
     got = {
         r["doc_id"]: (r["width"], r["n_bytes"])
-        for r in extract_image_features(df, use_fake_decoder=False).collect()
+        for r in extract_image_features(df).collect()
     }
     assert got[1][0] == 4
     assert got[2][0] is None and got[2][1] > 0
     assert got[3][0] is None
+
+
+def test_pill_row_leaves_batch_neighbour_hashes_exact(spark):
+    """A pill row's NULL hash must not turn its batch's BIGINT hash
+    column into float64: 56-bit hashes above 2**53 would round, so a
+    healthy image's hash would depend on what shares its batch."""
+    rng = np.random.default_rng(0)
+    imgs = [encode_png(rng.integers(0, 256, (16, 18, 1), dtype=np.uint8)) for _ in range(8)]
+    schema = "doc_id long, media binary"
+    alone = spark.createDataFrame(list(enumerate(imgs)), schema).coalesce(1)
+    mixed = spark.createDataFrame(list(enumerate(imgs)) + [(99, b"bad")], schema).coalesce(1)
+    want = {r["doc_id"]: (r["dhash"], r["ahash"]) for r in image_phash(alone).collect()}
+    got = {r["doc_id"]: (r["dhash"], r["ahash"]) for r in image_phash(mixed).collect()}
+    assert any(d > 1 << 53 for d, _ in want.values())
+    assert got.pop(99) == (None, None)
+    assert got == want
+    gray = [grayscale_int(decode_png_pixels(b)) for b in imgs]
+    assert want == {i: (dhash_int(g), ahash_int(g)) for i, g in enumerate(gray)}

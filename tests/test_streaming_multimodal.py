@@ -83,8 +83,11 @@ def test_multimodal_binary_pipeline(spark):
     assert rows[1]["media_bytes"] == 17
     assert len(rows[1]["media_sha256"]) == 64
     feats = extract_image_features(df).orderBy("doc_id").collect()
+    # none of the three payloads decodes: each is a pill row with NULL
+    # dimensions and its true byte count
     assert [r["n_bytes"] for r in feats] == [17, 13, 0]
-    assert all(64 <= r["width"] < 576 for r in feats)
+    assert all(r["width"] is None and r["height"] is None and r["channels"] is None
+               for r in feats)
 
 
 def test_sample_frames(spark):
@@ -287,12 +290,39 @@ def test_extract_image_features_real_png_decoder(spark):
         (2, _encode_png(rng.integers(0, 256, (4, 20, 1), dtype=np.uint8))),
     ]
     df = spark.createDataFrame(rows, "doc_id long, media binary")
-    feats = {
-        r["doc_id"]: r
-        for r in extract_image_features(df, use_fake_decoder=False).collect()
-    }
+    feats = {r["doc_id"]: r for r in extract_image_features(df).collect()}
     assert (feats[1]["width"], feats[1]["height"], feats[1]["channels"]) == (9, 12, 3)
     assert (feats[2]["width"], feats[2]["height"], feats[2]["channels"]) == (20, 4, 1)
+
+
+def test_extract_image_features_default_returns_true_dimensions(spark):
+    """The default call decodes: PNG, JPEG and GIF rows report their
+    real width/height/channels and byte count."""
+    import numpy as np
+
+    from turbine_maintenance_etl_spark.llm.gif import encode_gif
+    from turbine_maintenance_etl_spark.llm.jpeg import encode_jpeg_baseline
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_png
+
+    rng = np.random.default_rng(5)
+    blobs = {
+        1: encode_png(rng.integers(0, 256, (5, 300, 4), dtype=np.uint8)),
+        2: encode_png(rng.integers(0, 256, (700, 3, 2), dtype=np.uint8)),
+        3: encode_jpeg_baseline(rng.integers(0, 256, (33, 17, 3), dtype=np.uint8)),
+        4: encode_gif([rng.integers(0, 4, (9, 260), dtype=np.uint8)],
+                      rng.integers(0, 256, (4, 3), dtype=np.uint8)),
+    }
+    df = spark.createDataFrame(list(blobs.items()), "doc_id long, media binary")
+    got = {
+        r["doc_id"]: (r["width"], r["height"], r["channels"], r["n_bytes"])
+        for r in extract_image_features(df).collect()
+    }
+    assert got == {
+        1: (300, 5, 4, len(blobs[1])),
+        2: (3, 700, 2, len(blobs[2])),
+        3: (17, 33, 3, len(blobs[3])),
+        4: (260, 9, 3, len(blobs[4])),
+    }
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
@@ -764,10 +794,14 @@ def test_resample_audio_distributed_with_poison_pill(spark):
 
     t = np.arange(800) / 8000.0
     sig = (0.5 * np.sin(2 * np.pi * 440 * t)).astype(np.float32)
+    # a 2 MB PCM16 WAV whose header declares sample_rate=1: it decodes,
+    # but resampling it to 16 kHz would allocate ~119 GiB
+    crafted = _encode_wav(np.zeros(1 << 20, dtype=np.float32), rate=1)
     rows = [
         (1, bytearray(_encode_wav(sig, rate=8000))),
         (2, bytearray(b"definitely not audio")),
         (3, None),
+        (4, bytearray(crafted)),
     ]
     df = spark.createDataFrame(rows, "doc_id long, media binary")
     out = {r["doc_id"]: r for r in resample_audio(df, target_rate=16000).collect()}
@@ -778,5 +812,6 @@ def test_resample_audio_distributed_with_poison_pill(spark):
     assert rate == 16000 and dec.shape == (1600, 1)
     # energy preserved through the resample (same sine, finer grid)
     assert abs(float(np.sqrt((dec[:, 0] ** 2).mean())) - 0.5 / np.sqrt(2)) < 0.01
-    for d in (2, 3):
+    for d in (2, 3, 4):
         assert out[d]["resampled"] is None and out[d]["err"] is not None
+    assert out[4]["err"].startswith("ValueError")

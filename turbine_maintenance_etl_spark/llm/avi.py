@@ -17,10 +17,10 @@ demuxer has a real in-container producer.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .multimodal import _map_media
 
 
 def _chunk(cid: bytes, payload: bytes) -> bytes:
@@ -75,7 +75,7 @@ def decode_avi_frames(data: bytes) -> list[bytes]:
     # explicit-stack walk: the previous recursive version let a crafted
     # ~12-bytes-per-level nested-LIST stream (a 24 KB blob suffices)
     # blow the interpreter recursion limit — RecursionError is not in
-    # the poison-pill catch list, so it killed the task instead of
+    # the poison-pill catch tuple, so it killed the task instead of
     # pilling (found by the r10 corrupted-stream fuzz)
     stack: list[tuple[int, int]] = [(12, end)]
     while stack:
@@ -114,28 +114,7 @@ def explode_avi_frames(
     Scale shape: the container bytes cross the Arrow boundary once and
     fan out to frame rows JVM-side of the next operator; no shuffle is
     introduced here."""
-    schema = (
-        f"{id_col} bigint, frame_idx bigint, media binary, err string"
+    return _map_media(
+        df, binary_col, id_col, "frame_idx bigint, media binary, err string",
+        lambda data: [(fi, f, None) for fi, f in enumerate(decode_avi_frames(data))],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[binary_col]) if r[binary_col] is not None else b""
-                try:
-                    for fi, frame in enumerate(decode_avi_frames(data)):
-                        rows.append({
-                            id_col: r[id_col], "frame_idx": fi,
-                            "media": frame, "err": None,
-                        })
-                except (ValueError, struct.error) as e:
-                    rows.append({
-                        id_col: r[id_col], "frame_idx": None,
-                        "media": None, "err": f"{type(e).__name__}: {e}",
-                    })
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame_idx", "media", "err"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)

@@ -2,13 +2,28 @@
 metadata (BASELINE.json north star).
 
 Design: media rides in a ``binary`` column next to typed metadata
-(media_type, byte length, content hash). Decode / feature-extraction /
-resize / frame-sampling run as Arrow-batched ``mapInPandas`` operators.
-PNG decoding is REAL (pure stdlib zlib + numpy — 8-bit greyscale /
-grey+alpha / RGB / RGBA, all five scanline filters, non-interlaced),
-and so is baseline JPEG since round 7 (from-spec codec, llm/jpeg.py);
-video containers/ffmpeg are not in this container and raise, with a
-deterministic fake available for plumbing tests. At 100 TB: binary
+(media_type, byte length, content hash). Decode, feature extraction,
+resize, resample and hashing run as Arrow-batched ``mapInPandas``
+operators over from-spec, stdlib + numpy codecs:
+
+- images: PNG (every legal still image: bit depths 1-16, palette with
+  tRNS, ADAM7 interlacing; llm/png.py), the JPEG family (baseline,
+  progressive, arithmetic, 12-bit and lossless, with restart intervals;
+  llm/jpeg.py + llm/jpeg_arith.py) and GIF (first composited frame;
+  llm/gif.py);
+- audio: WAV with PCM 8/16-bit, IMA and MS ADPCM (llm/adpcm.py) and
+  G.711 A-law/µ-law (llm/g711.py);
+- video: Motion-JPEG AVI (llm/avi.py) and frames-as-rows tables.
+
+One poison-pill contract: every decode operator maps its rows through
+``_map_media``. A NULL payload reads as empty bytes. A row whose decode
+raises one of ``_CORRUPT_MEDIA`` comes back as exactly one pill row:
+NULL feature columns plus ``err = "<type>: <message>"`` (the two
+feature extractors have no ``err`` column; the image one keeps the
+true ``n_bytes``). Any other exception fails the task, so the codecs
+convert their crash types to ValueError at the dispatch boundary
+(``_CORRUPT_STREAM_ERRORS``) and cap header-declared allocations
+(``png.MAX_IMAGE_PIXELS``, ``MAX_RESAMPLE_FRAMES``). At 100 TB: binary
 payloads stay columnar in parquet (no base64 inflation), metadata
 predicates prune row groups before any decode, and
 ``spark.sql.files.maxPartitionBytes`` bounds per-task decode memory.
@@ -18,7 +33,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -26,23 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DECODE_AVAILABLE = True  # PNG (stdlib zlib) + baseline JPEG (llm/jpeg.py)
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples/pixel
-
-
-def decode_png_pixels(data: bytes) -> np.ndarray:
-    """Pure-Python PNG decode to a (height, width, channels) uint8
-    array. Round 8: the full-coverage implementation lives in
-    ``llm/png.py`` — every legal still-image PNG decodes (bit depths
-    1-16, palette with tRNS alpha, ADAM7 interlacing, all filters);
-    this name stays as the stable import point for the pipeline
-    operators and tests."""
-    from .png import decode_png_pixels as _full
-
-    return _full(data)
-
+from .png import PNG_SIG, decode_png_pixels, encode_png_extended
 
 # Exception types a corrupted stream may surface from the from-spec
 # codecs that are NOT in the operators' poison-pill catch list — the
@@ -66,6 +65,68 @@ _CORRUPT_STREAM_ERRORS = (
     RecursionError,
 )
 
+# The poison-pill catch tuple: a row whose decode raises one of these
+# becomes a tagged pill row. Used only by _map_media.
+_CORRUPT_MEDIA = (ValueError, NotImplementedError, struct.error, zlib.error)
+
+
+def _map_rows(
+    df: DataFrame,
+    keys: list[str],
+    inputs: list[str],
+    fields: str,
+    fn: Callable[..., list[tuple]],
+) -> DataFrame:
+    """The one Arrow row loop: ``fn(*input_values)`` returns a list of
+    ``fields`` tuples, zero or more output rows per input row, each
+    emitted after that row's ``keys`` values. Key types pass through
+    from ``df``. The output frame is built with object columns so a
+    NULL never turns a batch's BIGINT column into float64, which would
+    round every 56-bit hash beside it."""
+    names = keys + [f.split()[0] for f in fields.split(",")]
+    schema = ", ".join(
+        [f"{k} {df.schema[k].dataType.simpleString()}" for k in keys] + [fields]
+    )
+    nk = len(keys)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for vals in zip(*(pdf[c].tolist() for c in keys + inputs)):
+                rows += [vals[:nk] + out for out in fn(*vals[nk:])]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return df.select(*dict.fromkeys(keys + inputs)).mapInPandas(batches, schema=schema)
+
+
+def _map_media(
+    df: DataFrame,
+    binary_col: str,
+    id_col: str,
+    fields: str,
+    decode: Callable[[bytes], list[tuple]],
+    pill: Callable[[bytes], tuple] | None = None,
+) -> DataFrame:
+    """The poison-pill media map every decode operator runs on:
+    ``decode(bytes)`` returns the row's output tuples as a list, so it
+    raises before any of them is emitted (NULL binary reads as
+    ``b""``). If it raises one of ``_CORRUPT_MEDIA`` the row yields one
+    pill row instead: ``pill(bytes)`` if given, else all fields NULL,
+    with the ``err`` field (when present) set to the tag."""
+    names = [f.split()[0] for f in fields.split(",")]
+
+    def rows(data: bytes | None) -> list[tuple]:
+        data = bytes(data) if data is not None else b""
+        try:
+            return decode(data)
+        except _CORRUPT_MEDIA as e:
+            out = list(pill(data)) if pill else [None] * len(names)
+            if "err" in names:
+                out[names.index("err")] = f"{type(e).__name__}: {e}"
+            return [tuple(out)]
+
+    return _map_rows(df, [id_col], [binary_col], fields, rows)
+
 
 def decode_image_pixels(data: bytes) -> np.ndarray:
     """Format-dispatching image decode to (h, w, channels) uint8:
@@ -76,7 +137,7 @@ def decode_image_pixels(data: bytes) -> np.ndarray:
     Corrupted streams raise ValueError (non-pill exception types are
     converted here, at the dispatch boundary)."""
     try:
-        if data.startswith(_PNG_SIG):
+        if data.startswith(PNG_SIG):
             return decode_png_pixels(data)
         if data[:2] == b"\xff\xd8":
             from turbine_maintenance_etl_spark.llm.jpeg import decode_jpeg_pixels
@@ -89,33 +150,6 @@ def decode_image_pixels(data: bytes) -> np.ndarray:
     except _CORRUPT_STREAM_ERRORS as e:
         raise ValueError(f"corrupt image stream: {type(e).__name__}: {e}") from e
     raise NotImplementedError("unsupported image format (PNG/JPEG/GIF available)")
-
-
-def _decode_image(data: bytes) -> dict:
-    """Real decoder path: PNG and baseline JPEG fully decoded to
-    pixels (stdlib+numpy only); other formats raise."""
-    px = decode_image_pixels(data)
-    return {
-        "width": int(px.shape[1]),
-        "height": int(px.shape[0]),
-        "channels": int(px.shape[2]),
-        "n_bytes": len(data),
-        "mean_intensity": round(float(px.mean()), 4),
-    }
-
-
-def _fake_decode(data: bytes) -> dict:
-    """Deterministic stand-in for a decoder: derives pseudo
-    width/height/channels from the byte content so the full Spark
-    pipeline (schema, batching, partitioning) is exercised end-to-end."""
-    n = len(data)
-    h = int.from_bytes(data[:4].ljust(4, b"\0"), "big")
-    return {
-        "width": 64 + (h % 512),
-        "height": 64 + ((h >> 9) % 512),
-        "channels": 3,
-        "n_bytes": n,
-    }
 
 
 def attach_binary_metadata(df: DataFrame, binary_col: str = "media") -> DataFrame:
@@ -131,35 +165,22 @@ def extract_image_features(
     df: DataFrame,
     binary_col: str = "media",
     id_col: str = "doc_id",
-    use_fake_decoder: bool = True,
 ) -> DataFrame:
-    """Decode-and-extract as Arrow-batched mapInPandas: each batch is a
-    pandas DataFrame of (id, bytes); output is typed metadata. The UDF
-    boundary crosses once per batch (not per row); decode parallelism ==
-    partition count."""
-    decode = _fake_decode if use_fake_decoder else _decode_image
-    schema = f"{id_col} bigint, width int, height int, channels int, n_bytes bigint"
+    """Decode-and-extract as Arrow-batched mapInPandas: (id, bytes) ->
+    (id, width, height, channels, n_bytes). The UDF boundary crosses
+    once per batch (not per row); decode parallelism == partition
+    count. Pill rows read as NULL dimensions with their true byte
+    count."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[binary_col]) if r[binary_col] is not None else b""
-                try:
-                    meta = decode(data)
-                except (ValueError, NotImplementedError, struct.error, zlib.error):
-                    # poison-pill doctrine (same as every sibling decode
-                    # operator): one corrupt/non-PNG row must not fail
-                    # the task 4x and kill a corpus-wide job — it reads
-                    # as NULL metadata with its true byte count
-                    meta = {
-                        "width": None, "height": None, "channels": None,
-                        "n_bytes": len(data),
-                    }
-                rows.append({id_col: r[id_col], **meta})
-            yield pd.DataFrame(rows, columns=[id_col, "width", "height", "channels", "n_bytes"])
+    def features(data: bytes) -> list[tuple]:
+        px = decode_image_pixels(data)
+        return [(px.shape[1], px.shape[0], px.shape[2], len(data))]
 
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)
+    return _map_media(
+        df, binary_col, id_col,
+        "width int, height int, channels int, n_bytes bigint",
+        features, pill=lambda data: (None, None, None, len(data)),
+    )
 
 
 def sample_frames(
@@ -183,8 +204,6 @@ def decode_wav_samples(data: bytes) -> tuple[np.ndarray, int]:
     IMA ADPCM (format 0x11, llm/adpcm.py — round 8); anything else
     raises (honest partial decoder, same policy as
     decode_png_pixels)."""
-    import struct
-
     if len(data) < 44 or not data.startswith(_WAV_SIG) or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE byte stream")
     pos, fmt, raw, n_fact = 12, None, None, None
@@ -254,82 +273,39 @@ def extract_audio_features(
 ) -> DataFrame:
     """WAV decode + feature extraction as Arrow-batched mapInPandas:
     (id, bytes) -> (id, sample_rate, n_channels, duration_s, rms, peak).
-    Same batching/schema discipline as extract_image_features; rows that
-    fail to decode surface NULL features instead of failing the batch
-    (bad media is routine at corpus scale — poison-pill rows must not
-    kill the job)."""
-    schema = (
-        f"{id_col} bigint, sample_rate int, n_channels int, "
-        "duration_s double, rms double, peak double"
+    Pill rows read as NULL features (bad media is routine at corpus
+    scale — poison-pill rows must not kill the job)."""
+
+    def features(data: bytes) -> list[tuple]:
+        samples, rate = decode_wav_samples(data)
+        mono = samples.mean(axis=1)
+        return [(
+            rate,
+            samples.shape[1],
+            round(samples.shape[0] / rate, 6),
+            round(float(np.sqrt(np.mean(mono**2))), 6) if len(mono) else 0.0,
+            round(float(np.abs(mono).max()), 6) if len(mono) else 0.0,
+        )]
+
+    return _map_media(
+        df, binary_col, id_col,
+        "sample_rate int, n_channels int, duration_s double, rms double, peak double",
+        features,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                out = {id_col: r[id_col], "sample_rate": None, "n_channels": None,
-                       "duration_s": None, "rms": None, "peak": None}
-                try:
-                    samples, rate = decode_wav_samples(
-                        bytes(r[binary_col]) if r[binary_col] is not None else b""
-                    )
-                    mono = samples.mean(axis=1)
-                    out.update(
-                        sample_rate=rate,
-                        n_channels=samples.shape[1],
-                        duration_s=round(samples.shape[0] / rate, 6),
-                        rms=round(float(np.sqrt(np.mean(mono**2))), 6) if len(mono) else 0.0,
-                        peak=round(float(np.abs(mono).max()), 6) if len(mono) else 0.0,
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    # struct.error belt-and-braces: decode_wav_samples
-                    # validates lengths, but any residual short-buffer
-                    # unpack must degrade to NULL features, not kill the
-                    # batch.
-                    pass
-                rows.append(out)
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_rate", "n_channels", "duration_s", "rms", "peak"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)
 
 
 # --- Image resize: REAL on the PNG path (numpy nearest-neighbor +
 # --- stdlib re-encode), the preprocessing step a vision-training
 # --- pipeline runs on every image before the encoder sees it ---------------
 
-_PNG_COLOR_BY_CHANNELS = {1: 0, 2: 4, 3: 2, 4: 6}
-
 
 def encode_png(px: np.ndarray, compress_level: int = 6) -> bytes:
-    """Minimal PNG encoder for (h, w, c) uint8 pixels: 8-bit, filter 0
-    per scanline, one zlib IDAT. Round-trips exactly through
-    ``decode_png_pixels`` (test-pinned)."""
-    if px.ndim != 3 or px.dtype != np.uint8 or px.shape[2] not in _PNG_COLOR_BY_CHANNELS:
+    """PNG encoder for (h, w, c) uint8 pixels: 8-bit, filter 0 per
+    scanline, one zlib IDAT (``png.encode_png_extended``). Round-trips
+    exactly through ``decode_png_pixels`` (test-pinned)."""
+    if px.ndim != 3 or px.dtype != np.uint8 or px.shape[2] not in (1, 2, 3, 4):
         raise ValueError(f"expected (h, w, c<=4) uint8 pixels, got {px.shape} {px.dtype}")
-    h, w, c = px.shape
-
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload))
-            + ctype
-            + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, _PNG_COLOR_BY_CHANNELS[c], 0, 0, 0)
-    # filter byte 0 per scanline, then one deflate stream
-    raw = np.concatenate(
-        [np.zeros((h, 1), np.uint8), px.reshape(h, w * c)], axis=1
-    ).tobytes()
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, compress_level))
-        + chunk(b"IEND", b"")
-    )
+    return encode_png_extended(px, compress_level=compress_level)
 
 
 def resize_nearest(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -348,53 +324,22 @@ def resize_images(
     out_h: int,
     binary_col: str = "media",
     id_col: str = "doc_id",
-    use_fake_decoder: bool = False,
 ) -> DataFrame:
-    """Batch image resize: decode PNG -> nearest-neighbor resample ->
+    """Batch image resize: decode -> nearest-neighbor resample ->
     re-encode PNG, as Arrow-batched ``mapInPandas`` (decode parallelism
-    == partition count, like every decode operator here). Non-PNG /
-    corrupt payloads survive as NULL ``resized`` with an error tag
-    (poison-pill doctrine — one bad image must not kill a 100 TB job).
+    == partition count, like every decode operator here). Undecodable
+    payloads survive as NULL ``resized`` with an error tag (poison-pill
+    doctrine — one bad image must not kill a 100 TB job)."""
 
-    With ``use_fake_decoder=True`` the pixel stage is skipped and a
-    deterministic fake payload flows through — the plumbing-only mode
-    for environments without even zlib-decodable fixtures."""
-    schema = (
-        f"{id_col} bigint, resized binary, out_width int, out_height int, "
-        "channels int, err string"
+    def resize(data: bytes) -> list[tuple]:
+        px = decode_image_pixels(data)
+        return [(encode_png(resize_nearest(px, out_w, out_h)), out_w, out_h, px.shape[2], None)]
+
+    return _map_media(
+        df, binary_col, id_col,
+        "resized binary, out_width int, out_height int, channels int, err string",
+        resize,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[binary_col]) if r[binary_col] is not None else b""
-                try:
-                    if use_fake_decoder:
-                        meta = _fake_decode(data)
-                        out, ch, err = data, meta["channels"], None
-                    else:
-                        px = decode_image_pixels(data)
-                        out = encode_png(resize_nearest(px, out_w, out_h))
-                        ch, err = int(px.shape[2]), None
-                except (ValueError, NotImplementedError, struct.error, zlib.error) as e:
-                    out, ch, err = None, None, f"{type(e).__name__}: {e}"
-                rows.append(
-                    {
-                        id_col: r[id_col],
-                        "resized": out,
-                        "out_width": out_w if out is not None else None,
-                        "out_height": out_h if out is not None else None,
-                        "channels": ch,
-                        "err": err,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "resized", "out_width", "out_height", "channels", "err"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)
 
 
 # --- Audio resample: REAL on the WAV/PCM path (numpy linear interp +
@@ -421,16 +366,29 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+# Output frames one resample may allocate (the png.MAX_IMAGE_PIXELS
+# magnitude): a WAV header declaring sample_rate=1 would otherwise ask
+# a 2 MB file for ~119 GiB of output.
+MAX_RESAMPLE_FRAMES = 1 << 26
+
+
 def resample_linear(samples: np.ndarray, rate_in: int, rate_out: int) -> np.ndarray:
     """Deterministic linear-interpolation resample per channel (the
     cheap production choice for rate normalization before a feature
-    frontend; no windowed-sinc dependency in-container). Pure numpy."""
+    frontend; no windowed-sinc dependency in-container). Pure numpy.
+    Raises ValueError before allocating more than
+    ``MAX_RESAMPLE_FRAMES`` output frames."""
     if rate_in == rate_out or samples.shape[0] == 0:
         # zero-frame audio is valid (placeholder recordings): passes
         # through as empty at the new rate, same as the equal-rate path
         return samples
     n_in = samples.shape[0]
     n_out = max(1, int(round(n_in * rate_out / rate_in)))
+    if n_out > MAX_RESAMPLE_FRAMES:
+        raise ValueError(
+            f"resample {rate_in}->{rate_out} Hz of {n_in} frames exceeds the "
+            f"{MAX_RESAMPLE_FRAMES}-frame cap"
+        )
     t_out = np.arange(n_out) * (rate_in / rate_out)
     t_in = np.arange(n_in, dtype=np.float64)
     return np.stack(
@@ -449,43 +407,19 @@ def resample_audio(
     ``target_rate`` -> PCM16 re-encode, as Arrow-batched mapInPandas
     (the exact preprocessing an ASR/audio-LM corpus runs before feature
     extraction). Poison-pill rows (non-WAV, truncated, unsupported
-    codec) survive as NULL ``resampled`` with an error tag."""
-    schema = (
-        f"{id_col} bigint, resampled binary, out_rate int, n_frames bigint, "
-        "n_channels int, err string"
+    codec, over-cap rate) survive as NULL ``resampled`` with an error
+    tag."""
+
+    def resample(data: bytes) -> list[tuple]:
+        samples, rate = decode_wav_samples(data)
+        out = resample_linear(samples, rate, target_rate)
+        return [(encode_wav(out, target_rate), target_rate, out.shape[0], out.shape[1], None)]
+
+    return _map_media(
+        df, binary_col, id_col,
+        "resampled binary, out_rate int, n_frames bigint, n_channels int, err string",
+        resample,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[binary_col]) if r[binary_col] is not None else b""
-                try:
-                    samples, rate = decode_wav_samples(data)
-                    out = resample_linear(samples, rate, target_rate)
-                    enc = encode_wav(out, target_rate)
-                    rows.append(
-                        {
-                            id_col: r[id_col], "resampled": enc,
-                            "out_rate": target_rate,
-                            "n_frames": int(out.shape[0]),
-                            "n_channels": int(out.shape[1]), "err": None,
-                        }
-                    )
-                except (ValueError, NotImplementedError, struct.error) as e:
-                    rows.append(
-                        {
-                            id_col: r[id_col], "resampled": None, "out_rate": None,
-                            "n_frames": None, "n_channels": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "resampled", "out_rate", "n_frames", "n_channels", "err"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)
 
 
 # --- Image perceptual hashing + dedup: the image twin of the text
@@ -546,34 +480,17 @@ def image_phash(
     err string). The id passes through untouched, so its output type is
     the INPUT's type (string/composite ids work — video_frame_signatures
     routes a composite key through here)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_type}, dhash bigint, ahash bigint, "
-        "width int, height int, err string"
+
+    def phash(data: bytes) -> list[tuple]:
+        px = decode_image_pixels(data)
+        gray = grayscale_int(px)
+        return [(dhash_int(gray), ahash_int(gray), px.shape[1], px.shape[0], None)]
+
+    return _map_media(
+        df, binary_col, id_col,
+        "dhash bigint, ahash bigint, width int, height int, err string",
+        phash,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[binary_col]) if r[binary_col] is not None else b""
-                out = {id_col: r[id_col], "dhash": None, "ahash": None,
-                       "width": None, "height": None, "err": None}
-                try:
-                    px = decode_image_pixels(data)
-                    gray = grayscale_int(px)
-                    out.update(
-                        dhash=dhash_int(gray), ahash=ahash_int(gray),
-                        width=int(px.shape[1]), height=int(px.shape[0]),
-                    )
-                except (ValueError, NotImplementedError, struct.error, zlib.error) as e:
-                    out["err"] = f"{type(e).__name__}: {e}"
-                rows.append(out)
-            yield pd.DataFrame(
-                rows, columns=[id_col, "dhash", "ahash", "width", "height", "err"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)
 
 
 def phash_dedup(ph: DataFrame, hash_col: str = "dhash", id_col: str = "doc_id") -> DataFrame:
@@ -726,32 +643,16 @@ def audio_fingerprint(
 
     Output: (id, afp bigint, n_frames bigint, sample_rate int,
     err string)."""
-    schema = (
-        f"{id_col} bigint, afp bigint, n_frames bigint, sample_rate int, err string"
+
+    def fingerprint(data: bytes) -> list[tuple]:
+        samples, rate = decode_wav_samples(data)
+        return [(audio_envelope_fingerprint_int(samples, n_windows), samples.shape[0], rate, None)]
+
+    return _map_media(
+        df, binary_col, id_col,
+        "afp bigint, n_frames bigint, sample_rate int, err string",
+        fingerprint,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[binary_col]) if r[binary_col] is not None else b""
-                out = {id_col: r[id_col], "afp": None, "n_frames": None,
-                       "sample_rate": None, "err": None}
-                try:
-                    samples, rate = decode_wav_samples(data)
-                    out.update(
-                        afp=audio_envelope_fingerprint_int(samples, n_windows),
-                        n_frames=int(samples.shape[0]),
-                        sample_rate=rate,
-                    )
-                except (ValueError, NotImplementedError, struct.error) as e:
-                    out["err"] = f"{type(e).__name__}: {e}"
-                rows.append(out)
-            yield pd.DataFrame(
-                rows, columns=[id_col, "afp", "n_frames", "sample_rate", "err"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(batches, schema=schema)
 
 
 # --- Video dedup: frame-sampled perceptual signatures. A "video" here

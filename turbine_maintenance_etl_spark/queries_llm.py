@@ -11,6 +11,7 @@ the hash family is engine-independent by construction).
 from __future__ import annotations
 
 import random
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1999,6 +2000,78 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.remove_duplicated_spans(_t(spark, sf_dir, "documents"), n=8, min_count=2)
 
 
+def _synthetic_media(keys: DataFrame, make: Callable[..., bytes]) -> DataFrame:
+    """(keys..., media binary): one ``make(*key) -> bytes`` blob per key
+    row, through the shared Arrow row loop. The key frame is spread
+    wide first: a doc_id projection of a small parquet arrives as ONE
+    partition, which would serialize the pure-Python encoders onto one
+    core (measured on the JPEG entry: the whole bench cost was the
+    single-partition generator)."""
+    from turbine_maintenance_etl_spark.llm.multimodal import _map_rows
+
+    return _map_rows(
+        ensure_parallelism(keys), keys.columns, keys.columns, "media binary",
+        lambda *key: [(make(*key),)],
+    )
+
+
+def _block_px(did: int):
+    """(g, pixels) of the JPEG-twin corpus: a 24x16 grayscale image
+    constant per 8x8 block (value keyed g = did // 2), plus a +did % 2
+    brightness variant. At quality 100 every JPEG mode decodes it
+    bit-exactly, so one SQL twin (_JPEG_PHASH_ORACLE) grades them all."""
+    import numpy as np
+
+    g, v = did // 2, did % 2
+    br = np.arange(16)[:, None] // 8
+    bc = np.arange(24)[None, :] // 8
+    return g, ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
+
+
+def _video_px(vid: int, fi: int):
+    """Frame ``fi`` of synthetic video ``vid``: 18x16 grayscale keyed
+    (vid // 2, fi), brightness-shifted for the odd twin."""
+    import numpy as np
+
+    vg, v = vid // 2, vid % 2
+    r = np.arange(16)[:, None]
+    c = np.arange(18)[None, :]
+    return ((vg * 41 + fi * 13 + r * 11 + c * 7) % 250 + v * 2).astype(np.uint8)
+
+
+def _wav_bytes(raw: bytes, tag: int = 1, bits: int = 16) -> bytes:
+    """Mono 16 kHz RIFF/WAVE bytes around ``raw`` sample data of format
+    ``tag`` (1 PCM, 6 A-law, 7 µ-law) at ``bits`` per sample."""
+    import struct
+
+    fmt = struct.pack("<HHIIHH", tag, 1, 16000, 16000 * bits // 8, bits // 8, bits)
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(raw)) + raw
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _phash_survivors(media: DataFrame) -> DataFrame:
+    """image_phash -> phash_dedup, projected to the phash entries' output."""
+    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
+
+    return phash_dedup(image_phash(media)).select("doc_id", "dhash", "ahash", "survivor")
+
+
+def _afp_survivors(media: DataFrame) -> DataFrame:
+    """audio_fingerprint with the min-id survivor per fingerprint."""
+    from turbine_maintenance_etl_spark.llm.multimodal import audio_fingerprint
+
+    w = Window.partitionBy("afp")
+    return audio_fingerprint(media).select(
+        "doc_id",
+        "afp",
+        "n_frames",
+        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
+    )
+
 
 @register(
     "dedup_image_phash",
@@ -2050,35 +2123,18 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing is one Arrow-batched map over the binary column, dedup
     shuffles 8-byte hash keys — never pixels."""
     import numpy as np
-    import pandas as pd
 
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        encode_png,
-        image_phash,
-        phash_dedup,
-    )
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_png
 
-    # single-partition doc_id scans serialize the per-row codec work
-    # onto one core (measured on the JPEG sibling: the whole bench cost
-    # was the unparallelized generator) — shuffle the 8-byte ids wide
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def png(did: int) -> bytes:
+        g, v = did // 3, did % 3
+        r = np.arange(16)[:, None]
+        c = np.arange(18)[None, :]
+        px = ((g * 37 + r * 11 + c * 7) % 250 + v * 2).astype(np.uint8)
+        return encode_png(px[:, :, None])
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 3, did % 3
-                r = np.arange(16)[:, None]
-                c = np.arange(18)[None, :]
-                px = ((g * 37 + r * 11 + c * 7) % 250 + v * 2).astype(np.uint8)
-                rows.append({"doc_id": did, "media": encode_png(px[:, :, None])})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, png))
 
 
 # shared by the baseline and mixed-baseline/progressive JPEG phash
@@ -2135,38 +2191,13 @@ def dedup_image_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes) -> min-id survivor. Brightness variants collapse (both
     hashes shift-invariant); sha256 would keep both. Scale: same as
     the PNG entry — one Arrow-batched map, 8-byte hash shuffle."""
-    import numpy as np
-    import pandas as pd
-
     from turbine_maintenance_etl_spark.llm.jpeg import encode_jpeg_baseline
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    # the doc_id projection of a small parquet arrives as ONE partition,
-    # which would serialize ~2 ms/image of pure-Python Huffman+DCT
-    # encode onto one core (measured: the whole 10s bench cost of this
-    # entry was the single-partition generator); one cheap shuffle of
-    # the 8-byte ids buys full-width codec parallelism
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def jpeg(did: int) -> bytes:
+        return encode_jpeg_baseline(_block_px(did)[1][:, :, None], quality=100)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                rows.append(
-                    {"doc_id": did,
-                     "media": encode_jpeg_baseline(px[:, :, None], quality=100)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, jpeg))
 
 
 @register(
@@ -2205,43 +2236,16 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure integer arithmetic — bit-exact, because PCM16 quantization is
     the identity for these amplitudes and the envelope compare is
     integer on both sides."""
-    import struct as _struct
-
     import numpy as np
-    import pandas as pd
 
-    from turbine_maintenance_etl_spark.llm.multimodal import audio_fingerprint
+    def wav(did: int) -> bytes:
+        g, v = did // 2, did % 2
+        i = np.arange(560, dtype=np.int64)
+        s = ((g * 7 + i * 13) % 2003 - 1001) * (1 + v)
+        return _wav_bytes(s.astype("<i2").tobytes())
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                i = np.arange(560, dtype=np.int64)
-                s = ((g * 7 + i * 13) % 2003 - 1001) * (1 + v)
-                raw = s.astype("<i2").tobytes()
-                fmt = _struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + _struct.pack("<I", len(raw)) + raw
-                )
-                wav = b"RIFF" + _struct.pack("<I", len(body)) + body
-                rows.append({"doc_id": did, "media": wav})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    fp = audio_fingerprint(media)
-    w = Window.partitionBy("afp")
-    return fp.select(
-        "doc_id",
-        "afp",
-        "n_frames",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _afp_survivors(_synthetic_media(docs, wav))
 
 
 @register(
@@ -2290,49 +2294,29 @@ def dedup_audio_fingerprint_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame
     again. Scale shape unchanged: one Arrow-batched map, 8-byte
     fingerprint shuffle, never samples."""
     import numpy as np
-    import pandas as pd
 
     from turbine_maintenance_etl_spark.llm.adpcm import (
         encode_wav_adpcm,
         encode_wav_ms_adpcm,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        audio_fingerprint,
-        encode_wav,
-    )
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_wav
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def wav(did: int) -> bytes:
+        g, v = did // 2, did % 2
+        p0 = ((g * 131) % 2003) - 1001
+        p1 = ((g * 57 + 7) % 2003) - 1001
+        fmt = g % 3
+        boundary = 500 if fmt == 1 else 505
+        vals = np.where(np.arange(560) < boundary, p0, p1)
+        x = (vals / 32768.0).astype(np.float32)[:, None]
+        if v == 1 or fmt == 2:
+            return encode_wav(x, 16000)
+        if fmt == 0:
+            return encode_wav_adpcm(x, 16000)
+        return encode_wav_ms_adpcm(x, 16000, 500)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                p0 = ((g * 131) % 2003) - 1001
-                p1 = ((g * 57 + 7) % 2003) - 1001
-                fmt = g % 3
-                boundary = 500 if fmt == 1 else 505
-                vals = np.where(np.arange(560) < boundary, p0, p1)
-                x = (vals / 32768.0).astype(np.float32)[:, None]
-                if v == 1 or fmt == 2:
-                    wav = encode_wav(x, 16000)
-                elif fmt == 0:
-                    wav = encode_wav_adpcm(x, 16000)
-                else:
-                    wav = encode_wav_ms_adpcm(x, 16000, 500)
-                rows.append({"doc_id": did, "media": wav})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    fp = audio_fingerprint(media)
-    w = Window.partitionBy("afp")
-    return fp.select(
-        "doc_id",
-        "afp",
-        "n_frames",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _afp_survivors(_synthetic_media(docs, wav))
 
 
 @register("dedup_image_phash_jpeg_lossless", _JPEG_PHASH_ORACLE)
@@ -2345,39 +2329,19 @@ def dedup_image_phash_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFra
     same formula values and the shared DuckDB twin grades the whole
     path value-for-value. Scale shape unchanged: one Arrow-batched map
     over the binary column, 8-byte hash shuffle, never pixels."""
-    import numpy as np
-    import pandas as pd
-
     from turbine_maintenance_etl_spark.llm.jpeg import (
         encode_jpeg_baseline,
         encode_jpeg_lossless,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def jpeg(did: int) -> bytes:
+        g, px = _block_px(did)
+        if g % 2 == 0:
+            return encode_jpeg_baseline(px[:, :, None], quality=100)
+        return encode_jpeg_lossless(px[:, :, None], 8, predictor=(g // 2) % 7 + 1)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                if g % 2 == 0:
-                    data = encode_jpeg_baseline(px[:, :, None], quality=100)
-                else:
-                    data = encode_jpeg_lossless(
-                        px[:, :, None], 8, predictor=(g // 2) % 7 + 1
-                    )
-                rows.append({"doc_id": did, "media": data})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, jpeg))
 
 
 @register("dedup_image_phash_png_formats", _JPEG_PHASH_ORACLE)
@@ -2393,49 +2357,27 @@ def dedup_image_phash_png_formats(spark: SparkSession, sf_dir: str) -> DataFrame
     in tests/test_png_full.py. Scale shape unchanged: one Arrow-batched
     map over the binary column, 8-byte hash shuffle, never pixels."""
     import numpy as np
-    import pandas as pd
 
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        encode_png,
-        image_phash,
-        phash_dedup,
-    )
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_png
     from turbine_maintenance_etl_spark.llm.png import encode_png_extended
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def png(did: int) -> bytes:
+        g, px = _block_px(did)
+        mode = g % 4
+        if mode == 0:  # plain 8-bit grayscale
+            return encode_png(px[:, :, None])
+        if mode == 1:  # 4-bit palette (<= 6 distinct values)
+            vals = np.unique(px)
+            idx = np.searchsorted(vals, px).astype(np.uint16)
+            plte = np.stack([vals, vals, vals], 1).astype(np.uint8)
+            return encode_png_extended(idx, 4, 3, palette=plte)
+        if mode == 2:  # 16-bit grayscale, high byte == v
+            return encode_png_extended(px.astype(np.uint16) * 257, 16, 0)
+        # 8-bit grayscale, ADAM7 interlaced
+        return encode_png_extended(px.astype(np.uint16), 8, 0, interlace=1)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                mode = g % 4
-                if mode == 0:  # plain 8-bit grayscale
-                    data = encode_png(px[:, :, None])
-                elif mode == 1:  # 4-bit palette (<= 6 distinct values)
-                    vals = np.unique(px)
-                    idx = np.searchsorted(vals, px).astype(np.uint16)
-                    plte = np.stack([vals, vals, vals], 1).astype(np.uint8)
-                    data = encode_png_extended(idx, 4, 3, palette=plte)
-                elif mode == 2:  # 16-bit grayscale, high byte == v
-                    data = encode_png_extended(
-                        px.astype(np.uint16) * 257, 16, 0
-                    )
-                else:  # 8-bit grayscale, ADAM7 interlaced
-                    data = encode_png_extended(
-                        px.astype(np.uint16), 8, 0, interlace=1
-                    )
-                rows.append({"doc_id": did, "media": data})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, png))
 
 
 @register("dedup_image_phash_gif", _JPEG_PHASH_ORACLE)
@@ -2450,37 +2392,20 @@ def dedup_image_phash_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape unchanged: one Arrow-batched map, 8-byte hash shuffle,
     never pixels."""
     import numpy as np
-    import pandas as pd
 
     from turbine_maintenance_etl_spark.llm.gif import encode_gif
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def gif(did: int) -> bytes:
+        g, px = _block_px(did)
+        vals = np.unique(px)
+        idx = np.searchsorted(vals, px)
+        size = max(2, 1 << int(len(vals) - 1).bit_length())
+        pal = np.zeros((size, 3), dtype=np.uint8)
+        pal[: len(vals)] = np.stack([vals, vals, vals], 1)
+        return encode_gif([idx], pal, interlace=bool(g % 2))
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                vals = np.unique(px)
-                idx = np.searchsorted(vals, px)
-                size = max(2, 1 << int(len(vals) - 1).bit_length())
-                pal = np.zeros((size, 3), dtype=np.uint8)
-                pal[: len(vals)] = np.stack([vals, vals, vals], 1)
-                rows.append({
-                    "doc_id": did,
-                    "media": encode_gif([idx], pal, interlace=bool(g % 2)),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, gif))
 
 
 def _g711_oracle() -> str:
@@ -2530,52 +2455,23 @@ def dedup_audio_fingerprint_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     grades the whole path bit-for-bit. Scale shape unchanged: one
     Arrow-batched map over the binary column, 8-byte fingerprint
     shuffle, never samples."""
-    import struct as _struct
-
     import numpy as np
-    import pandas as pd
 
     from turbine_maintenance_etl_spark.llm.g711 import ALAW_TABLE, ULAW_TABLE
-    from turbine_maintenance_etl_spark.llm.multimodal import audio_fingerprint
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def wav(did: int) -> bytes:
+        g, v = did // 2, did % 2
+        i = np.arange(560, dtype=np.int64)
+        codes = ((g * 7 + i * 13) % 256).astype(np.uint8)
+        ulaw = g % 2 == 0
+        if v == 0:  # raw G.711 codewords
+            return _wav_bytes(codes.tobytes(), 0x07 if ulaw else 0x06, 8)
+        # the SAME decoded values, PCM16 container
+        table = ULAW_TABLE if ulaw else ALAW_TABLE
+        return _wav_bytes(table[codes].astype("<i2").tobytes())
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                i = np.arange(560, dtype=np.int64)
-                codes = ((g * 7 + i * 13) % 256).astype(np.uint8)
-                ulaw = g % 2 == 0
-                if v == 0:  # raw G.711 codewords
-                    raw = codes.tobytes()
-                    fmt = _struct.pack(
-                        "<HHIIHH", 0x07 if ulaw else 0x06, 1, 16000, 16000, 1, 8
-                    )
-                else:  # the SAME decoded values, PCM16 container
-                    table = ULAW_TABLE if ulaw else ALAW_TABLE
-                    raw = table[codes].astype("<i2").tobytes()
-                    fmt = _struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + _struct.pack("<I", len(raw)) + raw
-                )
-                wav = b"RIFF" + _struct.pack("<I", len(body)) + body
-                rows.append({"doc_id": did, "media": wav})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    fp = audio_fingerprint(media)
-    w = Window.partitionBy("afp")
-    return fp.select(
-        "doc_id",
-        "afp",
-        "n_frames",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _afp_survivors(_synthetic_media(docs, wav))
 
 
 _VIDEO_SIG_ORACLE = """
@@ -2620,42 +2516,17 @@ def dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     video -> min-id survivor per signature. The DuckDB twin recomputes
     frame dHashes from the pixel formula + resize index map and the
     identical string fold — md5-exact across engines."""
-    import numpy as np
-    import pandas as pd
-
     from turbine_maintenance_etl_spark.llm.multimodal import (
         encode_png,
         video_frame_signatures,
     )
 
-    vids = ensure_parallelism(
-        _t(spark, sf_dir, "documents").select("doc_id").filter(
-            F.col("doc_id") < 1000
-        )
-    )
-    frames = vids.select(
+    frames = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000).select(
         F.col("doc_id").alias("video_id"),
         F.explode(F.sequence(F.lit(0), F.lit(9))).alias("frame_idx"),
     )
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for _, rr in pdf.iterrows():
-                vid, fi = int(rr["video_id"]), int(rr["frame_idx"])
-                vg, v = vid // 2, vid % 2
-                r = np.arange(16)[:, None]
-                c = np.arange(18)[None, :]
-                px = ((vg * 41 + fi * 13 + r * 11 + c * 7) % 250 + v * 2).astype(
-                    np.uint8
-                )
-                rows.append(
-                    {"video_id": vid, "frame_idx": fi, "media": encode_png(px[:, :, None])}
-                )
-            yield pd.DataFrame(rows, columns=["video_id", "frame_idx", "media"])
-
-    media = frames.mapInPandas(
-        gen, schema="video_id bigint, frame_idx bigint, media binary"
+    media = _synthetic_media(
+        frames, lambda vid, fi: encode_png(_video_px(vid, fi)[:, :, None])
     )
     return video_frame_signatures(media, every_nth=2)
 
@@ -2671,9 +2542,6 @@ def dedup_video_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is graded by the IDENTICAL DuckDB twin, md5-exact. Scale
     shape: container bytes cross Arrow once and fan out to frame rows;
     the signature fold shuffles 8-byte hashes, never pixels."""
-    import numpy as np
-    import pandas as pd
-
     from turbine_maintenance_etl_spark.llm.avi import (
         encode_avi_mjpeg,
         explode_avi_frames,
@@ -2683,34 +2551,16 @@ def dedup_video_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_frame_signatures,
     )
 
-    vids = ensure_parallelism(
-        _t(spark, sf_dir, "documents").select("doc_id").filter(
-            F.col("doc_id") < 1000
-        )
-    )
+    def avi(vid: int) -> bytes:
+        frames = [encode_jpeg_lossless(_video_px(vid, fi)[:, :, None]) for fi in range(10)]
+        return encode_avi_mjpeg(frames, 18, 16)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                vid = int(did)
-                vg, v = vid // 2, vid % 2
-                frames = []
-                for fi in range(10):
-                    r = np.arange(16)[:, None]
-                    c = np.arange(18)[None, :]
-                    px = ((vg * 41 + fi * 13 + r * 11 + c * 7) % 250
-                          + v * 2).astype(np.uint8)
-                    frames.append(encode_jpeg_lossless(px[:, :, None]))
-                rows.append(
-                    {"video_id": vid, "media": encode_avi_mjpeg(frames, 18, 16)}
-                )
-            yield pd.DataFrame(rows, columns=["video_id", "media"])
-
-    avis = vids.mapInPandas(gen, schema="video_id bigint, media binary")
-    frames = explode_avi_frames(avis).filter(F.col("err").isNull()).select(
-        "video_id", "frame_idx", "media"
+    vids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000).select(
+        F.col("doc_id").alias("video_id")
     )
+    frames = explode_avi_frames(_synthetic_media(vids, avi)).filter(
+        F.col("err").isNull()
+    ).select("video_id", "frame_idx", "media")
     return video_frame_signatures(frames, every_nth=2)
 
 
@@ -2760,7 +2610,6 @@ def dedup_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and replays the band split (shift/mask), join, and bit_count(xor)
     verification — pair-set and distances hash-exact across engines."""
     import numpy as np
-    import pandas as pd
 
     from turbine_maintenance_etl_spark.llm.multimodal import (
         encode_png,
@@ -2768,31 +2617,18 @@ def dedup_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_near_dup_pairs,
     )
 
-    docs = ensure_parallelism(
-        _t(spark, sf_dir, "documents").select("doc_id").filter(
-            F.col("doc_id") < 600
-        )
-    )
+    def png(did: int) -> bytes:
+        g, v = did // 2, did % 2
+        r = np.arange(16)[:, None]
+        c = np.arange(18)[None, :]
+        px = ((g * 37 + r * 11 + c * 7) % 150).astype(np.int64)
+        if v == 1:
+            px[8, 9] += 100
+        return encode_png(px.astype(np.uint8)[:, :, None])
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                r = np.arange(16)[:, None]
-                c = np.arange(18)[None, :]
-                px = ((g * 37 + r * 11 + c * 7) % 150).astype(np.int64)
-                if v == 1:
-                    px[8, 9] += 100
-                rows.append(
-                    {"doc_id": did, "media": encode_png(px.astype(np.uint8)[:, :, None])}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
+    docs = _t(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 600)
     return phash_near_dup_pairs(
-        image_phash(media), hash_col="dhash", id_col="doc_id",
+        image_phash(_synthetic_media(docs, png)), hash_col="dhash", id_col="doc_id",
         n_bands=7, band_bits=8, max_hamming=6,
     ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
@@ -3179,34 +3015,18 @@ def dedup_image_phash_jpeg_progressive(spark: SparkSession, sf_dir: str) -> Data
     DuckDB twin grades both entries value-for-value. Scale shape
     unchanged: one Arrow-batched map over the binary column, 8-byte
     hash shuffle, never pixels."""
-    import numpy as np
-    import pandas as pd
-
     from turbine_maintenance_etl_spark.llm.jpeg import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+    def jpeg(did: int) -> bytes:
+        g, px = _block_px(did)
+        enc = encode_jpeg_baseline if g % 2 == 0 else encode_jpeg_progressive
+        return enc(px[:, :, None], quality=100)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                enc = encode_jpeg_baseline if g % 2 == 0 else encode_jpeg_progressive
-                rows.append({"doc_id": did, "media": enc(px[:, :, None], quality=100)})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, jpeg))
 
 
 @register("dedup_image_phash_jpeg_arith", _JPEG_PHASH_ORACLE)
@@ -3225,9 +3045,6 @@ def dedup_image_phash_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     libjpeg in tests/test_jpeg_arith.py. Scale shape unchanged: one
     Arrow-batched map over the binary column, 8-byte hash shuffle,
     never pixels."""
-    import numpy as np
-    import pandas as pd
-
     from turbine_maintenance_etl_spark.llm.jpeg import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
@@ -3236,30 +3053,18 @@ def dedup_image_phash_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_arith,
         encode_jpeg_progressive_arith,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        encoders = (
-            lambda px: encode_jpeg_baseline(px, quality=100),
-            lambda px: encode_jpeg_progressive(px, quality=100),
-            # non-default DAC conditioning: entropy changes, values must not
-            lambda px: encode_jpeg_arith(px, quality=100, dc_cond=(0, 2), ac_kx=3),
-            lambda px: encode_jpeg_progressive_arith(px, quality=100),
-        )
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                rows.append({"doc_id": did, "media": encoders[g % 4](px[:, :, None])})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
+    encoders = (
+        lambda px: encode_jpeg_baseline(px, quality=100),
+        lambda px: encode_jpeg_progressive(px, quality=100),
+        # non-default DAC conditioning: entropy changes, values must not
+        lambda px: encode_jpeg_arith(px, quality=100, dc_cond=(0, 2), ac_kx=3),
+        lambda px: encode_jpeg_progressive_arith(px, quality=100),
     )
+
+    def jpeg(did: int) -> bytes:
+        g, px = _block_px(did)
+        return encoders[g % 4](px[:, :, None])
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return _phash_survivors(_synthetic_media(docs, jpeg))
